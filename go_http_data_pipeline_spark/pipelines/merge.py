@@ -7,11 +7,13 @@ update, so MERGE is expressed relationally:
 
     merged = base LEFT-ANTI updates ON key  UNION  updates
 
-which Catalyst executes as one shuffle-free-if-co-partitioned pass.
-At 100 TB this runs inside ``foreachBatch`` against a partitioned
-table, rewriting only the partitions that contain matched keys
-(partition pruning on the anti-join side); with a table format that
-supports MERGE INTO the same plan maps 1:1 onto it.
+which Catalyst executes as one anti-join pass. It is not shuffle-free:
+the base parquet table is not bucketed by key, so the anti-join
+shuffles it (see :func:`merge_into`). At 100 TB this runs inside
+``foreachBatch`` against a partitioned table, rewriting only the
+partitions that contain matched keys (partition pruning on the
+anti-join side); with a table format that supports MERGE INTO the
+same plan maps 1:1 onto it.
 """
 
 from __future__ import annotations
@@ -27,6 +29,12 @@ def merge_into(base: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     (the login auto-register path, ``Server/main.go:112-120``).
     Schemas must match by name; ``unionByName`` keeps this positional-
     order-proof.
+
+    Plan: under ``foreachBatch`` the micro-batch is a ``LogicalRDD``
+    with no size statistics, so the optimizer cannot see that it is
+    small and never broadcasts it. The anti-join plans as a
+    SortMergeJoin that hash-shuffles the WHOLE base table (and the
+    batch) on every micro-batch.
     """
     kept = base.join(updates.select(key), on=key, how="left_anti")
     return kept.unionByName(updates)
@@ -45,10 +53,11 @@ def apply_cdc(
 
     The relational form is the same single pass as :func:`merge_into`
     (left-anti on touched keys, then union), so it inherits the same
-    scale shape: co-partitioned by ``key`` it is shuffle-free, and
-    under ``foreachBatch`` against a partitioned table only the
-    partitions holding touched keys rewrite. Delete-by-anti-join means
-    a delete costs the same as an update — no tombstone scan.
+    scale shape: the anti-join shuffles ``base`` unless the feed is
+    known to be small enough to broadcast, and under ``foreachBatch``
+    against a partitioned table only the partitions holding touched
+    keys rewrite. Delete-by-anti-join means a delete costs the same as
+    an update — no tombstone scan.
 
     The CDC feed must hold at most one row per key (standard MERGE
     precondition; a multi-row feed is compacted upstream to its latest

@@ -178,6 +178,27 @@ def codegen_stage_count(df: DataFrame) -> int:
     return len(set(re.findall(r"\*\((\d+)\)", plan_str(df, "simple"))))
 
 
+def codegen_compiles(spark) -> dict:
+    """JVM-wide generated-class compiles so far: ``{"compiles",
+    "compile_ms"}``. Only a codegen-cache miss compiles, so the delta
+    across a re-run of a query is the recompiles that run paid.
+
+    ``compiles`` is the sample count of Spark's ``CodegenMetrics``
+    compilation-time histogram (one sample per Janino compile).
+    ``compile_ms`` is ``CodeGenerator.compileTime``, the exact
+    accumulated compile time: the histogram's decaying reservoir keeps
+    at most 1028 samples, so summing it under-counts a long session.
+    In ``local[N]`` the executors share the driver JVM, so task-side
+    compiles are counted too."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return {
+        "compiles": metrics.METRIC_COMPILATION_TIME().getCount(),
+        "compile_ms": codegen.compileTime() / 1e6,
+    }
+
+
 def _node_depths(lines: list[str]) -> list[int]:
     """Tree depth of each simple-plan line = column where the node
     name starts (after the ``+-``/``:-``/indent prefix)."""

@@ -12,8 +12,27 @@ Scale design (100 TB / 1000-executor target):
 * Session timezone pinned to UTC so timestamp semantics are identical
   across engines (fixtures are naive/UTC parquet timestamps).
 
-Locally we run ``local[$SPARK_GRAFT_CPUS]`` (default 32) — the same
-declarative plans move to a cluster unchanged.
+Codegen cache. Queries run again and again inside one session, so each
+generated class should be compiled once. Spark's compiled-class cache
+holds 100 entries by default, while one pass over the 18 perfbench
+``batch_queries`` queries at sf0.01 needs 410-440 (a class compiled
+under both the driver's and the tasks' class loader takes two
+entries). The default evicted them, and the warm pass recompiled
+311-317 classes: ~2.8 s of Janino time by ``CodegenMetrics``, about a
+quarter of the pass, on 4 cores. One pass over the whole registry at
+sf0.001 needs ~2,140 entries (``tools/codegen_sweep.py`` prints the
+figure), so the cache holds 4,096: a replay of every registered query
+in one session still hits. ``useIdInClassName=false`` drops the
+``…ForCodegenStageN`` suffix from generated class names, so identical
+stage code from two plans shares one entry instead of differing only
+in its name. With both, the warm benchmark pass compiles 0-6 classes,
+once, for queries whose plan changes after their first run has
+materialized a memo. The cache is JVM-wide and sized when the first
+class compiles, so both are fixed here, not options.
+
+Locally we run ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on) — the same declarative plans move to a cluster
+unchanged.
 """
 
 from __future__ import annotations
@@ -22,6 +41,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "go-http-data-pipeline-spark",
@@ -29,7 +50,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
@@ -42,6 +63,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

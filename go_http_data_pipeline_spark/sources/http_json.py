@@ -24,6 +24,15 @@ Decoding mirrors Go ``encoding/json`` semantics (SURVEY.md §1.1.3):
 unknown fields dropped, missing fields null, malformed lines -> all-
 null row (PERMISSIVE) rather than an error.
 
+Every transport frames records the same way: bodies and files are
+split on the newline byte only, and each line is decoded on its own.
+Raw U+2028, U+2029 and U+0085 are legal inside JSON strings, so they
+must not split a record (``str.splitlines()`` would). Invalid UTF-8
+becomes U+FFFD, one per invalid byte, as Go's decoder does inside
+strings; an invalid byte therefore spoils at most its own line (a byte
+outside a string makes that line malformed) instead of failing the
+whole partition on every replay.
+
 Streaming offsets are PER-FILE record counts (``{"files": {name:
 n}}``), monotonic because ingest files are append-only. Per-file
 tracking (not a single global index over name-sorted files) is what
@@ -41,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from collections.abc import Sequence
 
 from pyspark.sql.datasource import (
@@ -91,11 +101,34 @@ def _decode_obj(obj, fields: list[tuple[str, str]]):
     return tuple(_coerce(obj.get(name), dt) for name, dt in fields)
 
 
-def _decode_line(line: str, fields: list[tuple[str, str]]):
-    """One JSON text -> one row tuple (PERMISSIVE)."""
+# surrogateescape maps each invalid byte to one lone surrogate in this
+# range; strict UTF-8 never decodes to one.
+_ESCAPED_BYTE = re.compile("[\udc80-\udcff]")
+
+
+def _text(raw: bytes) -> str:
+    """Bytes -> str with Go's invalid-UTF-8 rule: each invalid byte
+    becomes one U+FFFD (``utf8.DecodeRune`` returns width 1). Python's
+    "replace" would fold a truncated multi-byte sequence into one."""
     try:
-        obj = json.loads(line)
-    except (json.JSONDecodeError, UnicodeDecodeError):
+        return raw.decode("utf-8")
+    except UnicodeDecodeError:
+        escaped = raw.decode("utf-8", "surrogateescape")
+        return _ESCAPED_BYTE.sub("\ufffd", escaped)
+
+
+def _records(data: bytes):
+    """The non-blank JSONL lines of ``data``, split on the newline byte
+    only."""
+    return (line for line in data.split(b"\n") if line.strip())
+
+
+def _decode_line(line: bytes | str, fields: list[tuple[str, str]]):
+    """One JSON text (raw line bytes, or already text) -> one row
+    tuple (PERMISSIVE)."""
+    try:
+        obj = json.loads(line if isinstance(line, str) else _text(line))
+    except json.JSONDecodeError:
         return tuple(None for _ in fields)
     return _decode_obj(obj, fields)
 
@@ -124,7 +157,7 @@ def _file_record_counts(spool: str) -> list[tuple[str, int]]:
         if cached is not None and cached[0] == size:
             n = cached[1]
         else:
-            with open(path, encoding="utf-8") as fh:
+            with open(path, "rb") as fh:
                 n = sum(1 for line in fh if line.strip())
             _COUNT_CACHE[path] = (size, n)
         out.append((path, n))
@@ -145,7 +178,7 @@ class _SpoolBatchReader(DataSourceReader):
         return [InputPartition(p) for p in _spool_files(self._spool)]
 
     def read(self, partition: InputPartition):
-        with open(partition.value, encoding="utf-8") as fh:
+        with open(partition.value, "rb") as fh:
             for line in fh:
                 if line.strip():
                     yield _decode_line(line, self._fields)
@@ -225,18 +258,17 @@ class _UrlBatchReader(DataSourceReader):
             with urllib.request.urlopen(
                 self._url, timeout=self._timeout
             ) as resp:
-                body = resp.read().decode("utf-8")
+                body = resp.read()
             try:
-                records = json.loads(body)
+                records = json.loads(_text(body))
             except json.JSONDecodeError:
                 records = None
             if isinstance(records, list):  # JSON array body
                 for obj in records:
                     yield _decode_obj(obj, self._fields)
             else:  # JSON-lines body
-                for line in body.splitlines():
-                    if line.strip():
-                        yield _decode_line(line, self._fields)
+                for line in _records(body):
+                    yield _decode_line(line, self._fields)
             return
         # Ranged JSONL split [lo, hi): Hadoop text-split semantics.
         # A non-first split fetches from lo-1 and discards through the
@@ -276,9 +308,8 @@ class _UrlBatchReader(DataSourceReader):
                     break
                 chunk += more
                 pos += len(more)
-        for line in chunk.decode("utf-8").splitlines():
-            if line.strip():
-                yield _decode_line(line, self._fields)
+        for line in _records(chunk):
+            yield _decode_line(line, self._fields)
 
 
 class _SpoolStreamReader(DataSourceStreamReader):
@@ -358,7 +389,7 @@ class _SpoolStreamReader(DataSourceStreamReader):
         if path is None or hi <= lo:
             return
         pos = 0
-        with open(path, encoding="utf-8") as fh:
+        with open(path, "rb") as fh:
             for line in fh:
                 if not line.strip():
                     continue
@@ -404,7 +435,6 @@ def _http_range_with_total(url: str, lo: int, timeout_s: float):
     responses — or Content-Length on a Range-ignoring 200; None when
     the server reports neither. The total is what lets the stream
     reader DETECT a truncated/rotated log instead of stalling."""
-    import re as _re
     import urllib.error
     import urllib.request
 
@@ -412,7 +442,7 @@ def _http_range_with_total(url: str, lo: int, timeout_s: float):
 
     def _total(headers) -> int | None:
         cr = headers.get("Content-Range", "")
-        m = _re.search(r"/(\d+)\s*$", cr)
+        m = re.search(r"/(\d+)\s*$", cr)
         return int(m.group(1)) if m else None
 
     try:
@@ -494,10 +524,8 @@ class _UrlStreamReader(DataSourceStreamReader):
         url, lo, hi = partition.value
         if url is None or hi <= lo:
             return
-        body = _http_range(url, lo, hi, self._timeout)
-        for line in body.decode("utf-8").splitlines():
-            if line.strip():
-                yield _decode_line(line, self._fields)
+        for line in _records(_http_range(url, lo, hi, self._timeout)):
+            yield _decode_line(line, self._fields)
 
     def commit(self, end: dict) -> None:
         pass  # the remote log is append-only; nothing to clean up

@@ -843,3 +843,76 @@ def test_url_fanin_resumes_each_source_independently(spark, tmp_path):
     finally:
         srv_a.close()
         srv_b.close()
+
+
+# Raw U+2028/U+2029/U+0085 are legal inside JSON strings; invalid UTF-8
+# inside a string becomes U+FFFD per byte (Go encoding/json), and an
+# invalid byte outside a string makes only its own line malformed.
+_HOSTILE_LOG = b"".join(
+    [
+        '{"name":"a\u2028b","age":1,"salary":10}\n'.encode(),
+        '{"name":"c\u2029d","age":2,"salary":20}\n'.encode(),
+        '{"name":"e\u0085f","age":3,"salary":30}\n'.encode(),
+        b'{"name":"g\xffh","age":4,"salary":40}\n',
+        b'{"name":"j\xe2\x82k","age":5,"salary":50}\n',
+        b'{"name":"x","age":6,"salary":60}\xff\n',
+        b'{"name":"z","age":7,"salary":70}\n',
+    ]
+)
+_HOSTILE_ROWS = {
+    ("a\u2028b", 1, 10): 1,
+    ("c\u2029d", 2, 20): 1,
+    ("e\u0085f", 3, 30): 1,
+    ("g\ufffdh", 4, 40): 1,
+    ("j\ufffd\ufffdk", 5, 50): 1,
+    (None, None, None): 1,
+    ("z", 7, 70): 1,
+}
+
+
+def test_decode_invalid_utf8_is_replaced_per_byte_like_go():
+    assert _decode_line(b'{"name":"g\xffh"}', FIELDS) == ("g\ufffdh", None, None)
+    # A truncated 3-byte sequence is two invalid bytes: two U+FFFD.
+    assert _decode_line(b'{"name":"j\xe2\x82k"}', FIELDS)[0] == "j\ufffd\ufffdk"
+    assert _decode_line(b'{"name":"x"}\xff', FIELDS) == (None, None, None)
+    assert _decode_line('{"name":"a\u2028b"}'.encode(), FIELDS)[0] == "a\u2028b"
+
+
+def test_hostile_log_gives_same_rows_on_every_transport(spark, tmp_path):
+    """Unicode line separators inside strings and invalid UTF-8 give
+    the same rows through the spool reader, the url batch reader (whole
+    body and byte-range splits) and the url stream reader."""
+    from collections import Counter
+
+    from go_http_data_pipeline_spark.sources.http_json import _RangeLogServer
+
+    ddl = "name string, age int, salary bigint"
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    (spool / "log.jsonl").write_bytes(_HOSTILE_LOG)
+    register(spark)
+    srv = _RangeLogServer(_HOSTILE_LOG)
+    try:
+        got = {
+            "spool": spark.read.format("httpjson").schema(ddl)
+            .option("spool", str(spool)).load().collect(),
+            "url": spark.read.format("httpjson").schema(ddl)
+            .option("url", srv.url).load().collect(),
+            "url_split": spark.read.format("httpjson").schema(ddl)
+            .option("url", srv.url).option("split_bytes", 40).load().collect(),
+        }
+        streamed = []
+        q = (
+            spark.readStream.format("httpjson").schema(ddl)
+            .option("url", srv.url).load()
+            .writeStream.foreachBatch(lambda b, _: streamed.extend(b.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        got["url_stream"] = streamed
+    finally:
+        srv.shutdown()
+    for transport, rows in got.items():
+        assert Counter(map(tuple, rows)) == _HOSTILE_ROWS, transport

@@ -4,7 +4,9 @@ For each headline query (or an explicit list): builds the shared
 caches first (like bench.py), then times every repeat separately
 (so build-vs-probe cost inside a single query is visible), captures
 ``explain("formatted")`` to ``plans/<tag>/<query>_<suffix>.txt``, and
-prints a per-repeat table. The timed action matches bench.py
+prints a per-repeat table with each repeat's generated-class compiles
+and compile ms (``plans.inspect.codegen_compiles``; a warm repeat
+should compile nothing). The timed action matches bench.py
 (``df.count()``) so numbers are comparable with BENCH_LOCAL.jsonl.
 
 Usage:
@@ -37,6 +39,7 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from go_http_data_pipeline_spark.plans.inspect import codegen_compiles
     from go_http_data_pipeline_spark.session import get_spark
 
     import __spark_entry__ as e
@@ -87,14 +90,18 @@ def main() -> int:
             print(f"# MISSING {name}", file=sys.stderr)
             continue
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        samples = []
+        samples, compiles, compile_ms = [], [], []
         n = 0
         for _ in range(max(1, args.repeats)):
             jvm_gc()
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             n = df.count()
             samples.append(round(time.perf_counter() - t0, 3))
+            c1 = codegen_compiles(spark)
+            compiles.append(c1["compiles"] - c0["compiles"])
+            compile_ms.append(round(c1["compile_ms"] - c0["compile_ms"], 1))
         spark.sparkContext.setJobDescription(None)
         if args.plans_dir:
             import contextlib
@@ -108,14 +115,20 @@ def main() -> int:
                 os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt"), "w"
             ) as f:
                 f.write(buf.getvalue())
-        out[name] = {"rows": n, "samples": samples, "min": min(samples)}
-        print(f"{min(samples):7.3f}  {samples}  {name} ({n} rows)",
+        out[name] = {
+            "rows": n, "samples": samples, "min": min(samples),
+            "compiles": compiles, "compile_ms": compile_ms,
+        }
+        print(f"{min(samples):7.3f}  {samples}  {name} ({n} rows)"
+              f"  compiles={compiles} compile_ms={compile_ms}",
               file=sys.stderr)
     total = sum(v["min"] for v in out.values())
     print(json.dumps({
         "total_min_sum": round(total, 3),
         "cache_build": round(cache_build, 3),
         "queries": {k: v["min"] for k, v in out.items()},
+        "compiles": {k: v["compiles"] for k, v in out.items()},
+        "compile_ms": {k: v["compile_ms"] for k, v in out.items()},
     }))
     return 0
 
