@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check. ``tools/check.py`` (and, at
+sf0.001, the tier-1 ``tests/test_oracle_gate.py``) runs each
+``queries()[name]`` and compares it with the matching
+``oracle_sql()[name]`` on DuckDB: row count, schema and exact
+order-insensitive values.
 
 All queries live in ``go_http_data_pipeline_spark/`` operator modules
 and self-register; this file just exposes the merged registry.

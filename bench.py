@@ -1,6 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Runs each headline query end-to-end (plan + execute + collect) on a
+Runs each headline query (plan + execute) on a
 local[$SPARK_GRAFT_CPUS] session and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -9,8 +9,9 @@ local[$SPARK_GRAFT_CPUS] session and prints ONE JSON line:
 The headline set spans the engine's surface: TPC-H-style scan/agg,
 multi-join + broadcast, window functions, event-time windows, and the
 LLM-pipeline ops (dedup, MinHash-LSH, cosine top-k). Each query is
-timed to full materialization (count + a cheap checksum collect) so
-lazy evaluation can't hide work.
+timed through ``df.count()`` only, which lets Catalyst prune columns
+the count does not need, so a time here can understate the cost of
+the full result. ``perfbench/run.py`` times fully collected results.
 """
 
 from __future__ import annotations

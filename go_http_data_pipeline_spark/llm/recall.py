@@ -75,15 +75,13 @@ _FAMILIES: tuple = (
     ("ivfpq", ivf_pq_ann_top1, _IVF_PQ_TOP1_ORACLE, "approx_cosine"),
 )
 
-# Round-13 _REFRESH swap (VERDICT r10 item 4, executed per the
-# pre-committed r13 window): the registered gate now carries miss
-# rows EXPLICITLY. The pre-swap shape had a silent-miss hole — a
-# family that finds NO candidate for a query contributed no row, so
-# per-family avg(in_top5) excluded its worst case and OVERSTATED
-# recall (59 rows at sf0.01, not 6 families x 10 queries = 60; the
-# gap was single-bucket LSH's singleton-bucket query). The swapped
-# gate emits the full (family, qid) grid with misses carried as
-# ann_neighbor NULL / in_top5 0. Both sides derive the grid from the
+# The gate carries miss rows EXPLICITLY. Without them a family that
+# finds NO candidate for a query contributes no row, so per-family
+# avg(in_top5) excludes its worst case and OVERSTATES recall (59 rows
+# at sf0.01, not 6 families x 10 queries = 60; the gap was
+# single-bucket LSH's singleton-bucket query). The gate emits the
+# full (family, qid) grid with misses carried as ann_neighbor NULL /
+# in_top5 0. Both sides derive the grid from the
 # SAME _FAMILIES table and the SAME query-set literal (vec_id <
 # N_QUERIES — the constant that also parameterizes the brute side and
 # every probe), so they cannot drift; deriving qids from the literal

@@ -309,16 +309,6 @@ def semantic_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Round-13 fold (pre-committed in the r13 window plan): the registered
-# row ``semdedup_recall_eval`` retired here as a PURE registry deletion
-# -- its three numbers are a verified strict subset of
-# ``semdedup_multiassign_recall``'s row (n_true_pairs /
-# n_bucketed_pairs / recall appear there as n_true_pairs /
-# n_single_pairs / recall_single, and n_missed is their difference;
-# value-for-value at sf0.001, docs/STATUS.md round-12 log). The
-# surviving query's body and oracle are untouched.
-
-
 def _multiassign_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_a, vec_b): cosine >= TAU pairs found when every vector
     belongs to its TWO nearest seed clusters — the SemDeDup recall

@@ -1,10 +1,10 @@
 """Query registry: collects every operator's demo query + oracle SQL.
 
 Each operator module registers named queries with the :func:`query`
-decorator. ``__spark_entry__.py`` exposes the merged registry to the
-driver's correctness harness (Spark result vs DuckDB oracle at
-sf=0.01). Queries without oracle SQL (non-SQL-expressible ops) get a
-rows-only check.
+decorator. ``__spark_entry__.py`` exposes the merged registry, and
+``tools/check.py`` (also run in tier-1 by ``tests/test_oracle_gate.py``)
+compares each query's Spark result with its DuckDB oracle. Queries
+without oracle SQL (non-SQL-expressible ops) get a rows-only check.
 """
 
 from __future__ import annotations
@@ -43,6 +43,8 @@ _MODULES = (
     "go_http_data_pipeline_spark.streaming.annindex",
     "go_http_data_pipeline_spark.streaming.pqindex",
     "go_http_data_pipeline_spark.streaming.semindex",
+    "go_http_data_pipeline_spark.streaming.capindex",
+    "go_http_data_pipeline_spark.streaming.manifestindex",
     "go_http_data_pipeline_spark.sources.http_json",
     "go_http_data_pipeline_spark.sources.jdbc",
     "go_http_data_pipeline_spark.llm.dedup",
@@ -85,175 +87,13 @@ def _load() -> None:
                 raise
 
 
-# ---------------------------------------------------------------------------
-# Driver-window ordering, derived from the CORRECTNESS_r*.json files.
-#
-# The driver checks only ~the first 50 registry rows per round, so
-# ordering is leverage. Through round 7 the per-round green sets were
-# hand-copied frozensets (~160 lines, appended manually each round); a
-# transcription slip would silently waste window slots on the wrong
-# queries (VERDICT r7 item 2). The same information lives on disk: each
-# round the driver writes CORRECTNESS_r{N}.json with per-query
-# rows/schema/hash verdicts. We now read those files at import time and
-# compute newest-green-round per query. Hand-maintained inputs shrink
-# to two small sets: _ROWS_ONLY (approx sketches whose re-check adds
-# nothing) and _REFRESH (queries whose code changed this round and must
-# re-enter the window even though they have a fresh green row).
-# ---------------------------------------------------------------------------
-
-# rows-only by design (approx sketches): a driver re-check adds
-# nothing, so they always sort dead last.
-_ROWS_ONLY = frozenset({"approx_distinct_parts", "approx_revenue_percentiles"})
-
-# Queries whose implementation changed this round and therefore need a
-# fresh driver row on the new code (results expected identical unless
-# noted, but the driver record is the hard signal). _REFRESH is
-# TRANSIENT by design: populated for the round being driven, cleared
-# back to frozenset() once that round's CORRECTNESS file lands.
-# Round 14: empty — the round-13 set (ann_family_recall_eval + the 4
-# GenIndex-family greens) retired when CORRECTNESS_r13.json recorded
-# all five green, and no round-14 edit touches a driver-green query's
-# results or plan (the twin registrations in streaming/semindex.py are
-# NEW rows, which rank at the front on their own).
-_REFRESH = frozenset()
-
-# New queries whose first driver check is DEFERRED while rounds up to
-# their per-query horizon are being recorded: ranked after the
-# stale-green tranche instead of at the front, because the current
-# round's 50-slot window is exactly consumed by the stale drain —
-# another rank-0 row would push one stale row back out. The deferred
-# query still runs in the full local gate (tools/check.py, hash-green
-# at sf0.01); only the driver's independent record waits. A deferral
-# expires BY ITSELF: once a CORRECTNESS file for a round > the
-# query's horizon exists on disk, the query ranks as a normal
-# never-checked row at the front of the next window — no hand-edit
-# required (hand-maintained green-state was exactly the hazard
-# VERDICT r7 item 2 removed from this file).
-#
-# Horizon 8 (first driver check in round 10): the round-9 window is
-# exactly 1 refresh + 4 never-checked url queries + the whole 45-row
-# r4-stale tranche (VERDICT r8 items 2+3), so the early round-9
-# additions (the CDC schema-evolution merge, the streaming
-# decontamination gate, the incremental IVF ANN index, the
-# product-quantization suite, and the IVF x PQ composite) wait for
-# round 10: 9 new + the 41-row r5-stale tranche = exactly the next
-# 50-slot window.
-#
-# Horizon 9 (first driver check in round 11): the round-10 window is
-# in turn already full (the 9 horizon-8 rows + 41 r5-stale), so the
-# late round-9 additions defer one round further and share the
-# round-11 window with the r7-green tranche.
-_DEFER: dict[str, int] = {
-    # (pq_recall_eval carried horizon 8 until the round-10 fold
-    # retired it into ann_family_recall_eval — llm/recall.py — which
-    # takes its slot in the round-10 window as a never-checked row.)
-    "cdc_merge_schema_evolution": 8,
-    "streaming_contamination_gate": 8,
-    "streaming_ivf_index_top1": 8,
-    "embedding_pq_codes": 8,
-    "pq_ann_top1": 8,
-    "contiguous_global_ids": 8,
-    "streaming_scd2_temporal_enrich": 8,
-    "ivf_pq_ann_top1": 8,
-    # (host_cap_audit carried horizon 9 until the round-10 fold moved
-    # its audit columns onto host_document_caps' kept rows.)
-    "pq_ann_top1_wide": 9,
-    "streaming_ivfpq_index_top1": 9,
-    "host_document_caps": 9,
-    "streaming_host_cap_state": 9,
-    "streaming_lsh_index_with_deletes": 9,
-    # Horizon 10 (first driver check in round 12): the round-10 and
-    # round-11 windows are already exactly full (see docs/STATUS.md
-    # "Round 10 plan"), so the session-7 data-loader pair waits for
-    # the round-12 window, which it shares with the r8 tranche.
-    "priority_sample_docs": 10,
-    "epoch_shuffle_shards": 10,
-    "streaming_priority_sample_state": 10,
-    "priority_sample_estimate_eval": 10,
-    # Round 10's ONE addition (VERDICT r9 item 6; the item-3 fold
-    # freed 5 rotation slots, which is what pays for it): IVF-index
-    # retraction. First driver check in round 12 with the other
-    # horizon-10 rows.
-    "streaming_ivf_index_with_deletes": 10,
-}
-
-
-def _correctness_dir() -> "Path":
-    from pathlib import Path
-
-    return Path(__file__).resolve().parent.parent
-
-
-def _row_green(rec: dict) -> bool:
-    """A driver row counts as green if the full rows+schema+hash check
-    passed, or if the driver ran the weaker rows-only check by design
-    (``err == 'no_oracle'``) and produced rows — for a query with no
-    oracle SQL, that rows-only record is the best available signal."""
-    if rec.get("rows_match") and rec.get("schema_match") and rec.get("hash_match"):
-        return True
-    return rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None
-
-
-def _newest_green_rounds() -> dict[str, int]:
-    """Map query name -> latest round number with a green driver row,
-    read from CORRECTNESS_r*.json at the repo root. Memoized."""
-    cache = getattr(_newest_green_rounds, "_cache", None)
-    if cache is not None:
-        return cache
-    import json
-    import re
-
-    newest: dict[str, int] = {}
-    root = _correctness_dir()
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue  # unreadable/partial file: skip, don't crash the registry
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            if isinstance(rec, dict) and _row_green(rec):
-                newest[name] = max(newest.get(name, 0), rnd)
-    _newest_green_rounds._cache = newest  # type: ignore[attr-defined]
-    return newest
-
-
-def _ordered(d: dict) -> dict:
-    """Driver-window ordering (the driver checks ~the first 50 rows):
-    never-checked/new queries and this round's refreshes first, then
-    green queries stalest-first (oldest newest-green round), so spare
-    window slots re-verify the rows whose driver record is oldest —
-    VERDICT r7 item 1: drain the 46-query r3-stale tranche (the
-    LLM/media/streaming block) through the round-8 window."""
-    newest = _newest_green_rounds()
-
-    max_recorded = max(newest.values(), default=0)
-
-    def rank(k: str) -> tuple[int, int]:
-        if k in _ROWS_ONLY:
-            return (9, 0)
-        if k in _DEFER and k not in newest and max_recorded <= _DEFER[k]:
-            # First check deferred while rounds up to the query's
-            # horizon record; nearer horizons sort first (see _DEFER).
-            return (2, _DEFER[k])
-        if k in _REFRESH or k not in newest:
-            return (0, 0)
-        return (1, newest[k])  # stalest (smallest round) first
-
-    keys = sorted(d, key=rank)  # stable: keeps module order within ties
-    return {k: d[k] for k in keys}
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration (module) order."""
     _load()
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
+    """DuckDB oracle SQL per query, in registration order."""
     _load()
-    return _ordered(_ORACLE)
+    return dict(_ORACLE)

@@ -46,14 +46,8 @@ of ~100 M docs is a few GB of index). Takedown cost is sized by the
 request, not the corpus: record tombstones O(deletes); the next
 compaction folds them in physically.
 
-HELD UNREGISTERED (the round-15 driver window is pre-committed and
-full — docs/STATUS.md "Round 15 plan"): register
-``streaming_host_cap_index`` + ``streaming_host_cap_index_with_deletes``
-when rotation slack frees (~round 16: add this module to
-``registry._MODULES`` and apply the ``@query`` decorators), with
-their oracles already staged below. Until then the driver-gate-shaped
-exact-value checks live in tests/test_capindex.py and the
-tools/check_held.py roster.
+Beyond the oracle gate, tests/test_capindex.py pins the replay/crash
+shapes, compaction invariance and the read-time plan shape.
 
 Reference parity: the reference (Server/main.go) has no curation
 ops; this extends the beyond-reference curation surface (SURVEY.md
@@ -70,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..llm.sampling import HOST_CAP, _host_caps_oracle
+from ..registry import query
 from .genindex import GenIndex
 
 # Fold the per-batch dirs into one bucketed generation every this many
@@ -87,7 +82,7 @@ _CAP_DELETE_MOD = 7
 
 _IDX_COLS = ("doc_id", "source", "n_chars")
 
-# The staged oracles: the no-delete twin shares the registered batch
+# The oracles: the no-delete twin shares the registered batch
 # query's oracle VERBATIM (the live index re-derives the batch
 # answer); the retraction twin answers the survivor render.
 _CAP_STREAM_ORACLE = _host_caps_oracle()
@@ -255,6 +250,7 @@ def _run_arrivals(
     return index_dir, seen
 
 
+@query("streaming_host_cap_index", oracle=_CAP_STREAM_ORACLE)
 def streaming_host_cap_index(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -273,6 +269,7 @@ def streaming_host_cap_index(
     return out
 
 
+@query("streaming_host_cap_index_with_deletes", oracle=_CAP_DELETE_ORACLE)
 def streaming_host_cap_index_with_deletes(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -6,7 +6,7 @@ through a real index family.
 quotas on the default POSIX control plane (dir numbering + ``_SUCCESS``
 as the implicit manifest). This module runs the SAME machinery — the
 same ``GenIndex`` appends/tombstones/folds, the same quota derivation,
-the same staged oracles — on the :class:`~.indexstore.ManifestIndexStore`
+the same oracles — on the :class:`~.indexstore.ManifestIndexStore`
 control plane, where every mutation is an immutable ``manifest-v{N}``
 installed by compare-and-swap. Two things are being proven:
 
@@ -42,16 +42,10 @@ entry names: control-plane cost is metadata-sized, never
 corpus-sized, and the one-GET listing REPLACES the per-read LIST
 walk an object store would otherwise pay.
 
-HELD UNREGISTERED (the round-15 driver window is pre-committed and
-full; the round-16 window is pre-committed to the capindex twins —
-docs/STATUS.md): register ``streaming_manifest_cap_takedown`` +
-``streaming_manifest_cap_timetravel`` when rotation slack frees
-(~round 17: add this module to ``registry._MODULES`` and apply the
-``@query`` decorators), with their oracles already staged below —
-both SHARED verbatim with already-certified queries, the
-streaming_priority_sample_state / semindex / capindex discipline.
-Until then the driver-gate-shaped exact-value checks live in
-tests/test_manifestindex.py and the tools/check_held.py roster.
+Both oracles are SHARED verbatim with the capindex twins (the
+streaming_priority_sample_state / semindex / capindex discipline).
+tests/test_manifestindex.py pins the manifest commits, retention and
+the read-time plan shape.
 
 Reference parity: the reference (Server/main.go) has no index,
 storage-format, or snapshot concepts; this extends the
@@ -68,6 +62,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..registry import query
 from .capindex import (
     _CAP_DELETE_MOD,
     _CAP_DELETE_ORACLE,
@@ -80,7 +75,7 @@ from .capindex import (
 from .genindex import GenIndex
 from .indexstore import ManifestIndexStore
 
-# The staged oracles: both SHARED verbatim with the capindex twins
+# The oracles: both SHARED verbatim with the capindex twins
 # (same machinery, same fixture drive, different control plane — the
 # values must not move, and sharing the oracle string makes that a
 # single source of truth).
@@ -129,6 +124,7 @@ def _run_with_takedown(
     return idx, v_pre
 
 
+@query("streaming_manifest_cap_takedown", oracle=_MANIFEST_TAKEDOWN_ORACLE)
 def streaming_manifest_cap_takedown(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -149,6 +145,7 @@ def streaming_manifest_cap_takedown(
     return out
 
 
+@query("streaming_manifest_cap_timetravel", oracle=_MANIFEST_TIMETRAVEL_ORACLE)
 def streaming_manifest_cap_timetravel(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -263,12 +263,6 @@ def streaming_ivfpq_index_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # answer from the surviving 16-byte rows, so a retraction is complete
 # the moment the tombstone lands (logical apply on the probe sides,
 # physical fold at the next compaction).
-#
-# The gate-twin below was held unregistered through rounds 10-12
-# (registry frozen while the deferral backlog drained; certified the
-# whole time by tools/check_held.py at sf0.001+sf0.01+sf0.1) and is
-# REGISTERED as of round 13 — the pre-committed r13 window's one
-# registration slot (VERDICT r12 "Next round" #2).
 
 # Every _IVFPQ_DELETE_MOD-th vector is retracted in the twin's delete
 # batch (the LSH/IVF convention).
@@ -302,8 +296,7 @@ def streaming_ivfpq_index_with_deletes(
     repair exists to do: codes are per-vector, so the retraction is
     complete when the tombstone lands. Logical==physical apply,
     replayed-delete idempotence, and LWW re-add are unit-pinned in
-    tests/test_pqindex.py. Registered in round 13 after three rounds
-    held under tools/check_held.py (see comment above)."""
+    tests/test_pqindex.py."""
     work = tempfile.mkdtemp(prefix="ivfpq_del_")
     index_dir = os.path.join(work, "index")
     delete_batch = _run_arrivals(spark, sf_dir, work, index_dir) + 1

@@ -45,11 +45,8 @@ probe join against the compacted generation consumes its bucketing
 O(duplicate pairs), the same bound as the batch answer; at cluster
 scale the state rewrite is a MERGE into a keyed table.
 
-REGISTERED round 14 (``streaming_semdedup_verdicts`` +
-``streaming_semdedup_with_deletes``), after three rounds held under
-tools/check_held.py with exact-value evidence at sf0.001/0.01/0.1 plus
-fuzz fixtures and the robustness axes; the driver-gate-shaped
-exact-value checks remain in tests/test_semindex.py.
+Replay/crash shapes, compaction invariance and retraction are pinned
+in tests/test_semindex.py.
 
 Reference parity: the reference (Server/main.go) has no vector or
 dedup ops; this extends the beyond-reference curation surface

@@ -1,11 +1,8 @@
 """Incremental per-host cap index (streaming/capindex.py) — the fifth
 GenIndex family: stream==batch equality, oracle exact-values for both
-held twins, replay/crash shapes, compaction invariance, retraction
+twins, replay/crash shapes, compaction invariance, retraction
 semantics (takedown, PROMOTION of a previously-evicted doc, LWW
-re-add), and the read-plan contracts. Held unregistered while the
-round-15 window is pre-committed and full; these are the
-driver-gate-shaped checks that keep its pre-registration evidence
-fresh (docs/STATUS.md round-14)."""
+re-add), and the read-plan contracts."""
 
 from __future__ import annotations
 
@@ -174,8 +171,7 @@ def test_stream_equals_batch_and_oracle(spark, sf_dir):
     """End-to-end through the engine (availableNow over the sharded
     fixture, >= 2 micro-batches): the live-index quota is
     row-identical to the batch ``host_document_caps`` AND exact-value
-    equal to the shared DuckDB oracle — the driver-gate check, kept
-    in pytest while the query is held unregistered."""
+    equal to the shared DuckDB oracle."""
     import duckdb
 
     from go_http_data_pipeline_spark.llm.sampling import host_document_caps

@@ -404,8 +404,7 @@ def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
 
 
 def test_recall_gate_carries_explicit_miss_rows(spark, sf_dir):
-    """The round-13 swapped gate (VERDICT r10 item 4, executed per the
-    pre-committed r13 ``_REFRESH`` slot): every (family, qid) pair gets
+    """The recall gate's full grid: every (family, qid) pair gets
     a row — a family that finds NO candidate for a query carries
     ``ann_neighbor`` NULL / ``in_top5`` 0 instead of a silent gap, so
     per-family ``avg(in_top5)`` averages over ALL queries, worst cases
@@ -433,10 +432,8 @@ def test_recall_gate_carries_explicit_miss_rows(spark, sf_dir):
 
 
 def test_recall_gate_matches_oracle(spark, sf_dir):
-    """Exact-value check of the swapped gate against its DuckDB twin
-    (``_RECALL_MISS_ORACLE``) — the held-query staging discipline's
-    check, kept after the r13 registration as the in-suite twin of the
-    driver's hash row."""
+    """Exact-value check of the recall gate against its DuckDB twin
+    (``_RECALL_MISS_ORACLE``)."""
     import duckdb
 
     from go_http_data_pipeline_spark.llm.recall import (

@@ -4,10 +4,7 @@ semantics (lost claims re-apply, dead claims burn a version, crashed
 writers stay invisible), store-agnostic value parity with the Posix
 control plane, time-travel reads across folds, vacuum retention with
 loud revocation, the full-takedown pin every GenIndex family carries,
-and the read-plan contracts. Held unregistered while the round-15/16
-windows are pre-committed and full; these are the driver-gate-shaped
-checks that keep the pre-registration evidence fresh
-(docs/STATUS.md round-15)."""
+and the read-plan contracts."""
 
 from __future__ import annotations
 

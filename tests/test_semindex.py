@@ -1,9 +1,7 @@
 """Incremental SemDeDup index (streaming/semindex.py) — the fourth
 GenIndex family: stream==batch equality, oracle exact-values for both
-held twins, replay/crash shapes, compaction invariance, retraction
-semantics (pair drop, keep-flip, LWW re-add). Held unregistered while
-the registry is frozen; these are the driver-gate-shaped checks that
-keep its pre-registration evidence fresh (docs/STATUS.md round-11)."""
+twins, replay/crash shapes, compaction invariance, retraction
+semantics (pair drop, keep-flip, LWW re-add)."""
 
 from __future__ import annotations
 
@@ -168,8 +166,7 @@ def test_stream_equals_batch_and_oracle(spark, sf_dir):
     """End-to-end through the engine (availableNow over the sharded
     fixture, >= 2 micro-batches): the accumulated verdicts are
     row-identical to the batch ``semantic_dedup_verdicts`` AND
-    exact-value equal to the shared DuckDB oracle — the driver-gate
-    check, kept in pytest while the query is held unregistered."""
+    exact-value equal to the shared DuckDB oracle."""
     import duckdb
 
     got = sorted(

@@ -1,9 +1,11 @@
-"""Local mirror of the driver's DuckDB-oracle correctness harness.
+"""The DuckDB-oracle correctness gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB over the same parquet fixtures, then compares row count,
 column names, and exact (order-insensitive) values. Stricter than a
-hash: reports the first differing rows.
+hash: reports the first differing rows. ``tests/test_oracle_gate.py``
+runs the same comparison (:func:`check_query`) over every registered
+query at sf0.001 in tier-1.
 
 Usage: python tools/check.py [sf_dir] [query ...]
 """
@@ -11,13 +13,14 @@ Usage: python tools/check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -134,6 +137,55 @@ def type_drift(sdf, arrow_schema):
     return out
 
 
+def oracle_db(sf_dir):
+    """A DuckDB connection with one view per fixture table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check_query(spark, con, fn, oracle, sf_dir):
+    """Run one query on Spark and, when it has ``oracle`` SQL, compare
+    it with DuckDB: row count, column names, type drift and exact
+    order-insensitive values. Returns ``(spark_rows, problems)``; an
+    empty ``problems`` list is a pass."""
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = sdf.collect()
+    except Exception as ex:
+        return 0, [f"spark error: {ex}"]
+    if oracle is None:
+        return len(srows), []
+    try:
+        otbl = con.execute(oracle).arrow()
+        ocols = otbl.schema.names
+        orows = list(zip(*[col.to_pylist() for col in otbl.columns])) if ocols else []
+        if not orows and otbl.num_rows:
+            orows = [()] * otbl.num_rows
+    except Exception as ex:
+        return len(srows), [f"duckdb error: {ex}"]
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
+    else:
+        drift = type_drift(sdf, otbl.schema)
+        if drift:
+            problems.append("type drift: " + "; ".join(drift))
+    if not problems:
+        sc, oc = canon(srows, scols), canon(orows, ocols)
+        diffs = [(i, a, b) for i, (a, b) in enumerate(zip(sc, oc)) if a != b]
+        if diffs:
+            i, a, b = diffs[0]
+            problems.append(
+                f"{len(diffs)}/{len(sc)} rows differ; first @{i}:\n  spark : {a}\n  oracle: {b}"
+            )
+    return len(srows), problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -142,9 +194,7 @@ def main() -> int:
     from go_http_data_pipeline_spark.session import get_spark
 
     spark = get_spark("check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_db(sf_dir)
 
     qs, oracles = e.queries(), e.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
@@ -152,55 +202,18 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = sdf.collect()
-        except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            flag = "  (EMPTY — verifies nothing!)" if not srows else ""
-            print(f"rows-only {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]{flag}")
-            n_rows_only += 1
-            continue
-        try:
-            otbl = con.execute(oracles[name]).arrow()
-            ocols = otbl.schema.names
-            orows = list(zip(*[col.to_pylist() for col in otbl.columns])) if ocols else []
-            if not orows and otbl.num_rows:
-                orows = [()] * otbl.num_rows
-        except Exception as ex:
-            print(f"FAIL {name}: duckdb error: {ex}")
-            n_fail += 1
-            continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-        else:
-            drift = type_drift(sdf, otbl.schema)
-            if drift:
-                problems.append("type drift: " + "; ".join(drift))
-        if not problems:
-            sc, oc = canon(srows, scols), canon(orows, ocols)
-            diffs = [
-                (i, a, b) for i, (a, b) in enumerate(zip(sc, oc)) if a != b
-            ]
-            if diffs:
-                i, a, b = diffs[0]
-                problems.append(
-                    f"{len(diffs)}/{len(sc)} rows differ; first @{i}:\n  spark : {a}\n  oracle: {b}"
-                )
+        n_rows, problems = check_query(spark, con, fn, oracles.get(name), sf_dir)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             n_fail += 1
-        else:
-            flag = "  (EMPTY — verifies nothing!)" if not srows else ""
-            print(f"PASS {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]{flag}")
+            continue
+        kind = "PASS" if name in oracles else "rows-only"
+        flag = "  (EMPTY — verifies nothing!)" if not n_rows else ""
+        print(f"{kind} {name}: {n_rows} rows  [{time.time()-t0:.1f}s]{flag}")
+        if name in oracles:
             n_pass += 1
+        else:
+            n_rows_only += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     return 1 if n_fail else 0
 

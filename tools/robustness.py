@@ -25,9 +25,10 @@ check.py invocation under TZ, see docstring)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPRESENTATIVE = [
     "q1_pricing_summary", "revenue_by_nation", "minhash_lsh_pairs",
@@ -65,6 +66,9 @@ REPRESENTATIVE = [
     # merge order), and the per-epoch shard positions are windowed
     # per (epoch, shard) so they must not see partition count at all
     "priority_sample_docs", "epoch_shuffle_shards",
+    # the incremental host-cap index under retraction: the read-time
+    # quota window and the tombstone fold must not see partitioning
+    "streaming_host_cap_index_with_deletes",
 ]
 
 

@@ -2719,9 +2719,7 @@ def main() -> int:
         "## O. Retraction cost on the semantic-dedup index (round 11)",
         "",
         "The same takedown question for the round-11 capability",
-        "(streaming/semindex.py, the fourth GenIndex family — held",
-        "under tools/check_held.py until its round-14 registration):",
-        "the pair",
+        "(streaming/semindex.py, the fourth GenIndex family): the pair",
         "state + (cid)-bucketed cell index built through",
         "sem_index_step arrivals, then the SAME fixed-size",
         f"{RETRACT_DELETES}-vector delete batch recorded at x1 and",
