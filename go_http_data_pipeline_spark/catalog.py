@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .memo import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -34,19 +36,6 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
 
-# Per-(application, fixture, table) memo of the loaded base frames —
-# the engine's stand-in for a metastore catalog, where a table
-# definition is resolved once per session, not re-derived per query.
-# DataFrames are immutable and the fixture dirs are never rewritten
-# within a session, so reuse is safe; without the memo EVERY query
-# call re-read the parquet footer, re-inferred the schema, and
-# re-analyzed the read plan for each referenced table (a query
-# touching 4 tables paid ~100-200 ms of pure py4j + analyzer latency
-# per invocation before any execution started). Keyed by
-# applicationId so a restarted context can never see a stale frame.
-_TABLE_CACHE: dict = {}
-
-
 def table(
     spark: SparkSession, sf_dir: str, name: str, fresh: bool = False
 ) -> DataFrame:
@@ -67,20 +56,22 @@ def table(
     # (anything resetting the zone mid-session would otherwise change
     # later-built expressions while the cached frame stayed UTC).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Keyed by applicationId AND the session object: sibling sessions
-    # (newSession) share one context/appId but have per-session conf
-    # and temp views — a frame analyzed in one must not leak into
-    # another's view registration.
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    df = None if fresh else _TABLE_CACHE.get(key)
-    if df is not None:
-        return df
+    if fresh:
+        return _read(spark, sf_dir, name)
+    # The session memo stands in for a metastore catalog, where a
+    # table definition is resolved once per session: without it every
+    # query call re-read the parquet footer, re-inferred the schema and
+    # re-analyzed the read plan of each table it touches (~100-200 ms
+    # of py4j + analyzer latency for a four-table query).
+    return session_memo(
+        spark, f"catalog.{name}", sf_dir, lambda: _read(spark, sf_dir, name)
+    )
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        df = _events(spark, sf_dir)
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_CACHE[key] = df
-    return df
+        return _events(spark, sf_dir)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

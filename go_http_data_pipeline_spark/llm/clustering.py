@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..memo import session_memo
 from ..registry import query
 
 K = 8  # clusters; initial centroids = vectors with vec_id < K
@@ -115,26 +116,21 @@ _ASSIGN2_SQL = """
 """
 
 
-_QCACHE: dict = {}
-
-
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, q): embeddings as quantized BIGINT arrays, spread
     across cores (single-file fixture scan -> one input split).
     Persisted per (session, sf): it feeds both k-means passes and
     the dim-stats scan — a checkpointed intermediate at scale."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    q = _QCACHE.get(key)
-    if q is None:
+    def build() -> DataFrame:
         emb = table(spark, sf_dir, "embeddings").repartition(
             spark.sparkContext.defaultParallelism
         )
-        q = emb.select(
+        return emb.select(
             "vec_id",
             F.expr(f"transform(embedding, x -> {_Q.format(x='x')})").alias("q"),
         ).persist()
-        _QCACHE[key] = q
-    return q
+
+    return session_memo(spark, "clustering.quantized", sf_dir, build)
 
 
 def _seed_cents(spark: SparkSession, sf_dir: str) -> list:
@@ -143,10 +139,11 @@ def _seed_cents(spark: SparkSession, sf_dir: str) -> list:
     fixture, previously re-collected (one extra job) on every
     ``kmeans_iteration`` call. The M-step's per-call collect stays:
     refreshed centroids ARE the iteration's work."""
-    key = ("seeds", spark.sparkContext.applicationId, sf_dir)
-    cents = _QCACHE.get(key)
-    if cents is None:
-        cents = [
+    return session_memo(
+        spark,
+        "clustering.seed_cents",
+        sf_dir,
+        lambda: [
             (r["vec_id"], r["q"])
             for r in sorted(
                 _quantized(spark, sf_dir)
@@ -154,9 +151,8 @@ def _seed_cents(spark: SparkSession, sf_dir: str) -> list:
                 .collect(),
                 key=lambda r: r["vec_id"],
             )
-        ]
-        _QCACHE[key] = cents
-    return cents
+        ],
+    )
 
 
 def _cent_literal(cent_rows: list) -> str:

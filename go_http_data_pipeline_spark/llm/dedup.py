@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..determinism import MERSENNE31 as P
 from ..determinism import md5_int, ngram_starts_sql
+from ..memo import session_memo
 from ..registry import query
 
 N_HASHES = 16
@@ -101,16 +102,11 @@ def shingles_of(docs: DataFrame) -> DataFrame:
     )
 
 
-# Per-(session, sf_dir) memo of the persisted shingle table: it feeds
-# MinHash signature build, shingle counts, and both sides of the
-# Jaccard verification join across two registered queries — at
-# cluster scale it would be a checkpointed intermediate table, and
-# locally the memo keeps bench iterations from re-tokenizing the
-# corpus once per call.
-_SHINGLE_CACHE: dict = {}
-
-
 def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted shingle table, memoized per (session, sf): it
+    feeds MinHash signature build, shingle counts, and both sides of
+    the Jaccard verification join across two registered queries — at
+    cluster scale it would be a checkpointed intermediate table."""
     # Persisted hash-partitioned BY SHINGLE: the expensive consumers
     # (the ngram/minhash verification self-joins) join on the shingle
     # key, and a persisted DataFrame keeps its outputPartitioning —
@@ -119,12 +115,12 @@ def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-shuffle either way, so keying the cache to the join-heavy
     # side is strictly better; on a cluster this is "bucket the
     # materialized shingle table by its join key".
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        sh = shingles(spark, sf_dir).repartition("sh_h").persist()
-        _SHINGLE_CACHE[key] = sh
-    return sh
+    return session_memo(
+        spark,
+        "dedup.shingles",
+        sf_dir,
+        lambda: shingles(spark, sf_dir).repartition("sh_h").persist(),
+    )
 
 
 def lsh_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,15 +133,13 @@ def lsh_bands_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     (interleaved A/B: 1.13 -> 0.63 s median at sf0.1; outputs pinned
     row-identical to the explode kernel by
     tests/test_llm_ops.py::test_array_kernel_bands_equal_explode_kernel)."""
-    key = ("bands", spark.sparkContext.applicationId, sf_dir)
-    bands = _SHINGLE_CACHE.get(key)
-    if bands is None:
+    def build() -> DataFrame:
         docs = table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism
         )
-        bands = lsh_bands_of_docs(docs).persist()
-        _SHINGLE_CACHE[key] = bands
-    return bands
+        return lsh_bands_of_docs(docs).persist()
+
+    return session_memo(spark, "dedup.lsh_bands", sf_dir, build)
 
 
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,12 +543,12 @@ def simhash_fingerprints_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries self-join it, so an uncached frame re-ran the full
     tokenize + 32-vote fold on BOTH join sides of every call (the
     d<=1 and d<=3 probes each paid the corpus pass twice)."""
-    key = ("simhash_fp", spark.sparkContext.applicationId, sf_dir)
-    fp = _SHINGLE_CACHE.get(key)
-    if fp is None:
-        fp = simhash_fingerprints(spark, sf_dir).persist()
-        _SHINGLE_CACHE[key] = fp
-    return fp
+    return session_memo(
+        spark,
+        "dedup.simhash_fingerprints",
+        sf_dir,
+        lambda: simhash_fingerprints(spark, sf_dir).persist(),
+    )
 
 
 @query(
@@ -775,16 +769,14 @@ def verified_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage in the logical plan, and Catalyst re-analyzed it per
     reference on every call). O(dup pairs) rows — the same scale
     class as the propagation's per-round checkpoints."""
-    ekey = ("nd_edges", spark.sparkContext.applicationId, sf_dir)
-    edges = _SHINGLE_CACHE.get(ekey)
-    if edges is None:
-        edges = (
-            minhash_lsh_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .localCheckpoint()
-        )
-        _SHINGLE_CACHE[ekey] = edges
-    return edges
+    return session_memo(
+        spark,
+        "dedup.verified_pair_edges",
+        sf_dir,
+        lambda: minhash_lsh_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(),
+    )
 
 
 def component_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,85 +785,83 @@ def component_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is a materialized intermediate table two queries consume
     (`dedup_components`, `dedup_keep_best_quality`) — recomputing the
     whole iteration per consumer would re-run every round's jobs."""
-    key = ("components", spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    edges = verified_pair_edges(spark, sf_dir)
-    # No .distinct() on the symmetric closure: verified pairs are
-    # unique with doc_a < doc_b, so the swapped copies cannot collide
-    # with the originals — the union IS the distinct symmetric edge
-    # set, and the dedup shuffle it replaced was a no-op by
-    # construction. The star carries a self-loop per node so one
-    # grouped min below covers min(own, neighbors) in a single join.
-    sym = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    )
-    star = sym.union(
-        sym.select("doc_a", F.col("doc_a").alias("doc_b"))
-    ).persist()
-    labels = (
-        sym.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("component_id"))
-        .persist()
-    )
-    # DataFrame.unpersist only releases cacheManager-registered
-    # persist() entries; localCheckpoint blocks live in the RDD
-    # registry and must be freed THERE, else an N-round propagation
-    # holds N superseded label copies until the ContextCleaner's GC
-    # gets around to them (the memory-pressure case checkpointing was
-    # added for). Superseded rounds are freed via the persistent-RDD
-    # map, identified by diffing registry ids around each checkpoint.
-    jsc = spark.sparkContext._jsc
-
-    def _persist_ids() -> set:
-        return set(jsc.getPersistentRDDs().keySet().toArray())
-
-    # NOTE private-API dependency: _persist_ids() reads the JVM-side
-    # persistent-RDD registry via _jsc (no public PySpark surface
-    # lists checkpoint blocks). The set-diff can catch MORE than one
-    # new id if a checkpoint registers several RDDs or something else
-    # persists concurrently — so every id in the diff is tracked and
-    # ALL of them are unpersisted once superseded (tracking just one
-    # would silently leak the rest until ContextCleaner GC).
-    prev_ckpt_ids: set = set()
-    # Convergence via the label-sum invariant instead of a per-round
-    # old-vs-new join: labels only ever DECREASE under min-propagation,
-    # so the (exact, bigint) label sum strictly decreases iff any label
-    # changed — one partial-aggregated scan of the fresh checkpoint
-    # replaces the join + filter + count job per round.
-    prev_sum = None
-    while True:
-        # One join + one grouped min per round: the star's self-loops
-        # make min-over-neighbors include the node's own label, so the
-        # previous nbr_min + left-join-back pair collapses into a
-        # single aggregation keyed on the node.
-        before_ids = _persist_ids()
-        # localCheckpoint (eager) truncates the lineage so the plan
-        # stays one-round deep no matter how many rounds run; it also
-        # materializes new_labels, subsuming the old persist().
-        new_labels = (
-            star.join(labels, star.doc_b == labels.doc_id)
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("component_id").alias("component_id"))
-            .localCheckpoint()
+    def build() -> DataFrame:
+        edges = verified_pair_edges(spark, sf_dir)
+        # No .distinct() on the symmetric closure: verified pairs are
+        # unique with doc_a < doc_b, so the swapped copies cannot collide
+        # with the originals — the union IS the distinct symmetric edge
+        # set, and the dedup shuffle it replaced was a no-op by
+        # construction. The star carries a self-loop per node so one
+        # grouped min below covers min(own, neighbors) in a single join.
+        sym = edges.union(
+            edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
-        new_ckpt_ids = _persist_ids() - before_ids
-        label_sum = new_labels.agg(F.sum("component_id")).collect()[0][0]
-        labels.unpersist()  # round-1 persist(); no-op afterwards
-        for ckpt_id in prev_ckpt_ids:
-            rdd = jsc.getPersistentRDDs().get(ckpt_id)
-            if rdd is not None:
-                rdd.unpersist(False)
-        prev_ckpt_ids = new_ckpt_ids
-        labels = new_labels
-        if label_sum == prev_sum:
-            break
-        prev_sum = label_sum
-    star.unpersist()
-    _SHINGLE_CACHE[key] = labels
-    return labels
+        star = sym.union(
+            sym.select("doc_a", F.col("doc_a").alias("doc_b"))
+        ).persist()
+        labels = (
+            sym.select(F.col("doc_a").alias("doc_id"))
+            .distinct()
+            .select("doc_id", F.col("doc_id").alias("component_id"))
+            .persist()
+        )
+        # DataFrame.unpersist only releases cacheManager-registered
+        # persist() entries; localCheckpoint blocks live in the RDD
+        # registry and must be freed THERE, else an N-round propagation
+        # holds N superseded label copies until the ContextCleaner's GC
+        # gets around to them (the memory-pressure case checkpointing was
+        # added for). Superseded rounds are freed via the persistent-RDD
+        # map, identified by diffing registry ids around each checkpoint.
+        jsc = spark.sparkContext._jsc
+
+        def _persist_ids() -> set:
+            return set(jsc.getPersistentRDDs().keySet().toArray())
+
+        # NOTE private-API dependency: _persist_ids() reads the JVM-side
+        # persistent-RDD registry via _jsc (no public PySpark surface
+        # lists checkpoint blocks). The set-diff can catch MORE than one
+        # new id if a checkpoint registers several RDDs or something else
+        # persists concurrently — so every id in the diff is tracked and
+        # ALL of them are unpersisted once superseded (tracking just one
+        # would silently leak the rest until ContextCleaner GC).
+        prev_ckpt_ids: set = set()
+        # Convergence via the label-sum invariant instead of a per-round
+        # old-vs-new join: labels only ever DECREASE under min-propagation,
+        # so the (exact, bigint) label sum strictly decreases iff any label
+        # changed — one partial-aggregated scan of the fresh checkpoint
+        # replaces the join + filter + count job per round.
+        prev_sum = None
+        while True:
+            # One join + one grouped min per round: the star's self-loops
+            # make min-over-neighbors include the node's own label, so the
+            # previous nbr_min + left-join-back pair collapses into a
+            # single aggregation keyed on the node.
+            before_ids = _persist_ids()
+            # localCheckpoint (eager) truncates the lineage so the plan
+            # stays one-round deep no matter how many rounds run; it also
+            # materializes new_labels, subsuming the old persist().
+            new_labels = (
+                star.join(labels, star.doc_b == labels.doc_id)
+                .groupBy(F.col("doc_a").alias("doc_id"))
+                .agg(F.min("component_id").alias("component_id"))
+                .localCheckpoint()
+            )
+            new_ckpt_ids = _persist_ids() - before_ids
+            label_sum = new_labels.agg(F.sum("component_id")).collect()[0][0]
+            labels.unpersist()  # round-1 persist(); no-op afterwards
+            for ckpt_id in prev_ckpt_ids:
+                rdd = jsc.getPersistentRDDs().get(ckpt_id)
+                if rdd is not None:
+                    rdd.unpersist(False)
+            prev_ckpt_ids = new_ckpt_ids
+            labels = new_labels
+            if label_sum == prev_sum:
+                break
+            prev_sum = label_sum
+        star.unpersist()
+        return labels
+
+    return session_memo(spark, "dedup.component_labels", sf_dir, build)
 
 
 @query(

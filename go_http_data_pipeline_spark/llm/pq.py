@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..memo import session_memo
 from ..registry import query
 from .similarity import (
     _CENTS_SQL,
@@ -261,79 +262,70 @@ def pq_assign(
     )
 
 
-_CB_CACHE: dict = {}
-
-
 def trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sub, code, c_sub array<bigint>): the Lloyd-refined codebook
     on the 1e-7 integer grid, memoized per (session, fixture). One
     assignment pass against the seeds, one exact-integer M-step
     (floor-divided grid means, the ``kmeans_iteration`` pattern),
     K*M*D <= 16k control-plane rows through the driver."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cb = _CB_CACHE.get(key)
-    if cb is not None:
-        return cb
-    seeds = _seed_codebook(spark, sf_dir)
-    emb = _spread(spark, table(spark, sf_dir, "embeddings"))
-    codes0 = pq_assign(emb, seeds).select("vec_id", "sub", "code")
-    # M-step: per (sub, code) exact integer sums for all D_SUB dims as
-    # agg COLUMNS -> floor-div means on the same grid (sum < 2^53 is
-    # double-exact; one IEEE division + floor is bit-identical in both
-    # engines). No posexplode (the dim expansion was a 4x row blow-up
-    # feeding a 4x-larger shuffle), and the refined codebook assembles
-    # IN-PLAN — a left join of the means onto the seeds with the
-    # quantized-seed fallback for empty codes, exactly the oracle's
-    # pq_cb CTE shape — instead of the previous collect() +
-    # createDataFrame round-trip that pulled 16k mean rows and pushed
-    # 4k codeword arrays through the driver (measured 4.8 s + 2.5 s
-    # cold at sf0.1). The result is one eager localCheckpoint: K*M
-    # control-plane rows materialized once per session, every consumer
-    # reads the leaf.
-    sums = [
-        F.sum(
-            F.expr(
-                f"CAST(FLOOR(CAST(element_at(e_sub, {i + 1}) AS DOUBLE)"
-                " * 1e7) AS BIGINT)"
+    def build() -> DataFrame:
+        seeds = _seed_codebook(spark, sf_dir)
+        emb = _spread(spark, table(spark, sf_dir, "embeddings"))
+        codes0 = pq_assign(emb, seeds).select("vec_id", "sub", "code")
+        # M-step: per (sub, code) exact integer sums for all D_SUB dims as
+        # agg COLUMNS -> floor-div means on the same grid (sum < 2^53 is
+        # double-exact; one IEEE division + floor is bit-identical in both
+        # engines). No posexplode (the dim expansion was a 4x row blow-up
+        # feeding a 4x-larger shuffle), and the refined codebook assembles
+        # IN-PLAN — a left join of the means onto the seeds with the
+        # quantized-seed fallback for empty codes, exactly the oracle's
+        # pq_cb CTE shape — instead of the previous collect() +
+        # createDataFrame round-trip that pulled 16k mean rows and pushed
+        # 4k codeword arrays through the driver (measured 4.8 s + 2.5 s
+        # cold at sf0.1). The result is one eager localCheckpoint: K*M
+        # control-plane rows materialized once per session, every consumer
+        # reads the leaf.
+        sums = [
+            F.sum(
+                F.expr(
+                    f"CAST(FLOOR(CAST(element_at(e_sub, {i + 1}) AS DOUBLE)"
+                    " * 1e7) AS BIGINT)"
+                )
+            ).alias(f"s{i}")
+            for i in range(D_SUB)
+        ]
+        means = (
+            _sub_slices(emb)
+            .join(codes0, ["vec_id", "sub"])
+            .groupBy("sub", "code")
+            .agg(*sums, F.count(F.lit(1)).alias("n"))
+            .select(
+                "sub",
+                "code",
+                F.array(
+                    *[
+                        F.floor(F.col(f"s{i}").cast("double") / F.col("n"))
+                        for i in range(D_SUB)
+                    ]
+                ).alias("md"),
             )
-        ).alias(f"s{i}")
-        for i in range(D_SUB)
-    ]
-    means = (
-        _sub_slices(emb)
-        .join(codes0, ["vec_id", "sub"])
-        .groupBy("sub", "code")
-        .agg(*sums, F.count(F.lit(1)).alias("n"))
-        .select(
-            "sub",
-            "code",
-            F.array(
-                *[
-                    F.floor(F.col(f"s{i}").cast("double") / F.col("n"))
-                    for i in range(D_SUB)
-                ]
-            ).alias("md"),
         )
-    )
-    # Empty code: keep the quantized seed (same FLOOR(x*1e7) grid).
-    q_seed = F.expr(
-        "transform(c_sub, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e7)"
-        " AS BIGINT))"
-    )
-    cb = (
-        seeds.join(means, ["sub", "code"], "left")
-        .select(
-            "sub",
-            "code",
-            F.coalesce(F.col("md"), q_seed).alias("c_sub"),
+        # Empty code: keep the quantized seed (same FLOOR(x*1e7) grid).
+        q_seed = F.expr(
+            "transform(c_sub, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1e7)"
+            " AS BIGINT))"
         )
-        .localCheckpoint()
-    )
-    _CB_CACHE[key] = cb
-    return cb
+        return (
+            seeds.join(means, ["sub", "code"], "left")
+            .select(
+                "sub",
+                "code",
+                F.coalesce(F.col("md"), q_seed).alias("c_sub"),
+            )
+            .localCheckpoint()
+        )
 
-
-_CODES_CACHE: dict = {}
+    return session_memo(spark, "pq.codebook", sf_dir, build)
 
 
 def _codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,17 +333,15 @@ def _codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAINED codebook, persisted per (session, fixture) — the PQ index
     table a real pipeline would checkpoint once and probe many
     times."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    codes = _CODES_CACHE.get(key)
-    if codes is None:
+    def build() -> DataFrame:
         emb = _spread(spark, table(spark, sf_dir, "embeddings"))
-        codes = (
+        return (
             pq_assign(emb, trained_codebook(spark, sf_dir), int_codebook=True)
             .select("vec_id", "sub", "code")
             .persist()
         )
-        _CODES_CACHE[key] = codes
-    return codes
+
+    return session_memo(spark, "pq.codes", sf_dir, build)
 
 
 @query(
@@ -427,9 +417,6 @@ _PQ_TOP1_ORACLE = f"""
     """
 
 
-_ADC_INPUTS_CACHE: dict = {}
-
-
 def _adc_inputs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -448,15 +435,12 @@ def _adc_inputs(
     (same ``sqrt(_DOT)`` arithmetic as ``vector_norms``); the previous
     ``vector_norms(...).filter(...)`` form computed norms behind a
     corpus-wide repartition exchange just to keep 10 rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _ADC_INPUTS_CACHE.get(key)
-    if got is not None:
-        return got
-    lut, cn2, q_norms = (
-        df.persist() for df in _build_adc_inputs(spark, sf_dir)
+    return session_memo(
+        spark,
+        "pq.adc_inputs",
+        sf_dir,
+        lambda: tuple(df.persist() for df in _build_adc_inputs(spark, sf_dir)),
     )
-    _ADC_INPUTS_CACHE[key] = (lut, cn2, q_norms)
-    return lut, cn2, q_norms
 
 
 def _build_adc_inputs(
@@ -590,29 +574,23 @@ def pq_ann_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus-sized ever shuffles at probe time (the long form's
 # (qid, vec_id) fold shuffles corpus x queries rows).
 
-_WIDE_CACHE: dict = {}
-
-
-_DENSE_CACHE: dict = {}
-
-
 def dense_code_ids(spark: SparkSession, sf_dir: str) -> list[int]:
     """The trained codebook's code ids, sorted — position = the DENSE
     codeword index used by the wide layout (code ids are seed vec_ids,
     so they are sparse; every sub shares one seed set). Memoized per
     (session, fixture): K <= 256 control-plane values."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    ids = _DENSE_CACHE.get(key)
-    if ids is None:
-        ids = sorted(
+    return session_memo(
+        spark,
+        "pq.dense_code_ids",
+        sf_dir,
+        lambda: sorted(
             r.code
             for r in trained_codebook(spark, sf_dir)
             .select("code")
             .distinct()
             .collect()
-        )
-        _DENSE_CACHE[key] = ids
-    return ids
+        ),
+    )
 
 
 def widen_codes(codes: DataFrame, code_ids: list[int]) -> DataFrame:
@@ -644,18 +622,14 @@ def _codes_wide_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     Built once per (session, fixture) from the long assignment and
     persisted — the one groupBy here is index-BUILD cost, not probe
     cost, exactly like ``_codes_cached``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    wide = _WIDE_CACHE.get(key)
-    if wide is not None:
-        return wide
-    wide = widen_codes(
-        _codes_cached(spark, sf_dir), dense_code_ids(spark, sf_dir)
-    ).persist()
-    _WIDE_CACHE[key] = wide
-    return wide
-
-
-_QLUT_CACHE: dict = {}
+    return session_memo(
+        spark,
+        "pq.codes_wide",
+        sf_dir,
+        lambda: widen_codes(
+            _codes_cached(spark, sf_dir), dense_code_ids(spark, sf_dir)
+        ).persist(),
+    )
 
 
 def _query_lut_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,55 +643,52 @@ def _query_lut_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, fixture) alongside ``_adc_inputs``: ten rows derived
     from the memoized codebook + the fixed query batch, previously
     re-assembled (four aggregate jobs) on every probe call."""
-    mkey = (spark.sparkContext.applicationId, sf_dir)
-    got = _QLUT_CACHE.get(mkey)
-    if got is not None:
-        return got
-    lut, cn2, q_norms = _adc_inputs(spark, sf_dir)
-    code_ids = dense_code_ids(spark, sf_dir)
-    dense = F.create_map(
-        *[F.lit(v) for c, i in zip(code_ids, range(len(code_ids))) for v in (c, i)]
-    )
-
-    def nest(df: DataFrame, keys: list[str], val: str, out: str) -> DataFrame:
-        """(…keys, sub, code, val) -> (…keys, out array<array<bigint>>):
-        inner arrays dense-indexed by code rank, outer by subspace.
-        The codebook is complete per (keys, sub), so array_sort on the
-        (index, value) structs yields gap-free positional arrays."""
-        return (
-            df.withColumn("cidx", dense[F.col("code")].cast("int"))
-            .groupBy(*keys, "sub")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("cidx", F.col(val).alias("v")))
-                    ),
-                    lambda s: s.v,
-                ).alias("arr")
-            )
-            .groupBy(*keys)
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "arr"))),
-                    lambda s: s.arr,
-                ).alias(out)
-            )
+    def build() -> DataFrame:
+        lut, cn2, q_norms = _adc_inputs(spark, sf_dir)
+        code_ids = dense_code_ids(spark, sf_dir)
+        dense = F.create_map(
+            *[F.lit(v) for c, i in zip(code_ids, range(len(code_ids))) for v in (c, i)]
         )
 
-    lut_rows = nest(
-        lut.withColumn("pdot", F.col("pdot").cast("long")), ["qid"], "pdot", "lut"
-    )
-    pn2_row = nest(
-        cn2.withColumn("pn2", F.col("pn2").cast("long")), [], "pn2", "pn2"
-    )
-    rows = (
-        lut_rows.crossJoin(F.broadcast(pn2_row))
-        .join(F.broadcast(q_norms), "qid")
-        .select("qid", "lut", "pn2", "q_nrm")
-        .persist()
-    )
-    _QLUT_CACHE[mkey] = rows
-    return rows
+        def nest(df: DataFrame, keys: list[str], val: str, out: str) -> DataFrame:
+            """(…keys, sub, code, val) -> (…keys, out array<array<bigint>>):
+            inner arrays dense-indexed by code rank, outer by subspace.
+            The codebook is complete per (keys, sub), so array_sort on the
+            (index, value) structs yields gap-free positional arrays."""
+            return (
+                df.withColumn("cidx", dense[F.col("code")].cast("int"))
+                .groupBy(*keys, "sub")
+                .agg(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(F.struct("cidx", F.col(val).alias("v")))
+                        ),
+                        lambda s: s.v,
+                    ).alias("arr")
+                )
+                .groupBy(*keys)
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("sub", "arr"))),
+                        lambda s: s.arr,
+                    ).alias(out)
+                )
+            )
+
+        lut_rows = nest(
+            lut.withColumn("pdot", F.col("pdot").cast("long")), ["qid"], "pdot", "lut"
+        )
+        pn2_row = nest(
+            cn2.withColumn("pn2", F.col("pn2").cast("long")), [], "pn2", "pn2"
+        )
+        return (
+            lut_rows.crossJoin(F.broadcast(pn2_row))
+            .join(F.broadcast(q_norms), "qid")
+            .select("qid", "lut", "pn2", "q_nrm")
+            .persist()
+        )
+
+    return session_memo(spark, "pq.query_lut", sf_dir, build)
 
 
 def adc_probe_wide(
@@ -869,17 +840,9 @@ def ivf_pq_ann_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def warm_probe_memos(spark: SparkSession, sf_dir: str) -> None:
-    """Build every per-(session, fixture) PQ memo eagerly: codebook,
-    long + wide code tables, ADC inputs, per-query LUT rows. The
-    probes build these lazily on first touch, which let their one-time
-    cost land inside a min-of-N bench repeat and vanish from the
-    measured minimum (VERDICT r15 item 1) — bench.py calls this in its
-    TIMED memo phase instead, so the suite total accounts for the
-    build the same way it accounts for the dedup cache build. Not a
-    result cache: everything here is a session-scoped index artifact
-    recomputed from the parquet inputs on every run."""
-    _codes_cached(spark, sf_dir).count()
-    _codes_wide_cached(spark, sf_dir).count()
-    for df in _adc_inputs(spark, sf_dir):
-        df.count()
-    _query_lut_rows(spark, sf_dir).count()
+    """Build every per-(session, fixture) PQ memo the probes read:
+    codebook, long + wide code tables, ADC inputs, per-query LUT rows
+    (each materialized by ``session_memo``), so a caller can time the
+    one-time index build apart from the probes."""
+    _codes_wide_cached(spark, sf_dir)
+    _query_lut_rows(spark, sf_dir)

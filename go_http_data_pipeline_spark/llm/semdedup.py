@@ -39,16 +39,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import session_memo
 from ..registry import query
 from .clustering import (
     _DIST,
-    K,
     _ASSIGN1_SQL,
     _QLONG_SQL,
     _QVECS_SQL,
     _best_expr,
     _cent_literal,
     _quantized,
+    _seed_cents,
 )
 
 # Cosine threshold for "semantic duplicate" — shared with the exact
@@ -144,27 +145,10 @@ def _verdicts_oracle(delete_mod: int | None = None) -> str:
 _VERDICTS_ORACLE = _verdicts_oracle()
 
 
-# Seed-centroid best-expr memo: the K centroid rows are control-plane
-# data collected ONCE per (session, sf) — verdicts and the recall
-# eval would otherwise each re-run the identical collect job.
-_BEST_CACHE: dict = {}
-
-
 def _seed_cents_literal(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    lit = _BEST_CACHE.get(key)
-    if lit is None:
-        vecs = _quantized(spark, sf_dir)
-        cents0 = [
-            (r["vec_id"], r["q"])
-            for r in sorted(
-                vecs.filter(F.col("vec_id") < K).collect(),
-                key=lambda r: r["vec_id"],
-            )
-        ]
-        lit = _cent_literal(cents0)
-        _BEST_CACHE[key] = lit
-    return lit
+    """The seed centroids as a SQL literal, from the K rows
+    ``clustering._seed_cents`` collects once per (session, sf)."""
+    return _cent_literal(_seed_cents(spark, sf_dir))
 
 
 def _seed_best_expr(spark: SparkSession, sf_dir: str) -> str:
@@ -189,12 +173,12 @@ def _cluster_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed by the verdicts query AND both recall evals — without
     the memo a registry sweep recomputes the cluster self-join once
     per consumer."""
-    key = ("cluster_pairs", spark.sparkContext.applicationId, sf_dir)
-    df = _BEST_CACHE.get(key)
-    if df is None:
-        df = _cluster_pairs(spark, sf_dir).persist()
-        _BEST_CACHE[key] = df
-    return df
+    return session_memo(
+        spark,
+        "semdedup.cluster_pairs",
+        sf_dir,
+        lambda: _cluster_pairs(spark, sf_dir).persist(),
+    )
 
 
 def _exact_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,14 +186,14 @@ def _exact_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     the most expensive job in the suite), memoized per (session, sf)
     so the two recall evals don't re-run the O(N²) pass the
     ``embedding_neardup_pairs`` query already paid for."""
-    key = ("exact_pairs", spark.sparkContext.applicationId, sf_dir)
-    df = _BEST_CACHE.get(key)
-    if df is None:
-        from .similarity import embedding_neardup_pairs
+    from .similarity import embedding_neardup_pairs
 
-        df = embedding_neardup_pairs(spark, sf_dir).persist()
-        _BEST_CACHE[key] = df
-    return df
+    return session_memo(
+        spark,
+        "semdedup.exact_pairs",
+        sf_dir,
+        lambda: embedding_neardup_pairs(spark, sf_dir).persist(),
+    )
 
 
 def _cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

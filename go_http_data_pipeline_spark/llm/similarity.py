@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..determinism import dsum, dsum_sql
+from ..memo import session_memo
 from ..registry import query
 
 N_PLANES = 8
@@ -357,27 +358,22 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", _bucket_col().alias("bucket"))
 
 
-_FEATS_CACHE: dict = {}
-
-
 def _ann_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, nrm, bucket) in ONE pass over the corpus,
     persisted — both the query side and the corpus side of the ANN
     join reuse it instead of recomputing norms and buckets from
     lineage. At cluster scale this is the precomputed ANN index
     table a real pipeline would checkpoint."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    feats = _FEATS_CACHE.get(key)
-    if feats is None:
+    def build() -> DataFrame:
         emb = _spread(spark, table(spark, sf_dir, "embeddings"))
-        feats = emb.select(
+        return emb.select(
             "vec_id",
             "embedding",
             F.sqrt(F.expr(_DOT.format(a="embedding", b="embedding"))).alias("nrm"),
             _bucket_col().alias("bucket"),
         ).persist()
-        _FEATS_CACHE[key] = feats
-    return feats
+
+    return session_memo(spark, "similarity.ann_features", sf_dir, build)
 
 
 _BUCKETS_SQL = f"""
@@ -653,12 +649,12 @@ def ivf_assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, fixture) — the inverted-file index table a deployment
     materializes once and probes many times. Shared by the IVF
     probes here and the IVF x PQ composite (``llm/pq.py``)."""
-    key = ("ivf", spark.sparkContext.applicationId, sf_dir)
-    assign = _FEATS_CACHE.get(key)
-    if assign is None:
-        assign = ivf_assignments(spark, sf_dir).persist()
-        _FEATS_CACHE[key] = assign
-    return assign
+    return session_memo(
+        spark,
+        "similarity.ivf_assign",
+        sf_dir,
+        lambda: ivf_assignments(spark, sf_dir).persist(),
+    )
 
 
 # Constant (not inline in the decorator) so the unified recall gate
@@ -1053,10 +1049,9 @@ def tfidf_cosine_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def warm_ann_memos(spark: SparkSession, sf_dir: str) -> None:
-    """Build the per-(session, fixture) ANN index memos eagerly (the
-    hyperplane feature table and the IVF cell assignment) — see
-    llm.pq.warm_probe_memos for why bench.py times these in its memo
-    phase instead of letting first-touch costs hide inside a
-    min-of-N repeat."""
-    _ann_features(spark, sf_dir).count()
-    ivf_assign_cached(spark, sf_dir).count()
+    """Build the per-(session, fixture) ANN index memos the probes
+    read (the hyperplane feature table and the IVF cell assignment),
+    so a caller can time the one-time index build apart from the
+    probes."""
+    _ann_features(spark, sf_dir)
+    ivf_assign_cached(spark, sf_dir)

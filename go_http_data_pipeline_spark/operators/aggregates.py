@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..determinism import davg, davg_sql, dsum, dsum_sql
+from ..memo import session_memo
 from ..registry import query
 
 
@@ -488,9 +489,6 @@ def sketch_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FREQ_ITEMS_CACHE: dict = {}
-
-
 @query(
     "heavy_hitters_eval",
     oracle="""
@@ -525,11 +523,12 @@ def heavy_hitters_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager full-scan + driver merge, and without the memo it would
     # fire at every query CONSTRUCTION (registry sweeps, plan tests,
     # each bench repeat) even when the returned plan never executes.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sketch_items = _FREQ_ITEMS_CACHE.get(key)
-    if sketch_items is None:
-        sketch_items = ev.stat.freqItems(["event_type"], 0.1).collect()[0][0]
-        _FREQ_ITEMS_CACHE[key] = sketch_items
+    sketch_items = session_memo(
+        spark,
+        "aggregates.freq_items",
+        sf_dir,
+        lambda: ev.stat.freqItems(["event_type"], 0.1).collect()[0][0],
+    )
     counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
     tot = counts.agg(F.sum("n_events").alias("total"))
     return (

@@ -33,11 +33,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..determinism import davg, davg_sql, dsum, dsum_sql
+from ..memo import session_memo
 from ..registry import query
 
 N_BUCKETS = 8
-
-_LAYOUT_CACHE: dict = {}
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -45,49 +44,47 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     into the session warehouse, once per (session, sf). Returns the
     two table names. At production scale this is the ingest job;
     every orderkey-equi-join thereafter is exchange-free."""
-    key = ("bucketed", spark.sparkContext.applicationId, sf_dir)
-    names = _LAYOUT_CACHE.get(key)
-    if names is not None:
-        return names
-    # Stable digest, NOT Python hash(): str hash is PYTHONHASHSEED-
-    # salted per process, which minted fresh table names every run and
-    # left orphaned bucketed copies piling up in the warehouse.
-    import hashlib
-    import shutil
-    from urllib.parse import urlparse
+    def build() -> tuple[str, str]:
+        # Stable digest, NOT Python hash(): str hash is PYTHONHASHSEED-
+        # salted per process, which minted fresh table names every run and
+        # left orphaned bucketed copies piling up in the warehouse.
+        import hashlib
+        import shutil
+        from urllib.parse import urlparse
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    li_name, ord_name = f"li_bkt_{tag}", f"ord_bkt_{tag}"
-    # The warehouse directory outlives the per-process metastore: a
-    # fresh session doesn't know the table, but its location from a
-    # previous run still exists and saveAsTable refuses the name.
-    # Drop both the catalog entry and any orphaned location.
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for name in (li_name, ord_name):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount", "l_quantity"
-    )
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_orderdate"
-    )
-    (
-        li.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(N_BUCKETS, "l_orderkey")
-        .sortBy("l_orderkey")
-        .saveAsTable(li_name)
-    )
-    (
-        orders.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(N_BUCKETS, "o_orderkey")
-        .sortBy("o_orderkey")
-        .saveAsTable(ord_name)
-    )
-    _LAYOUT_CACHE[key] = (li_name, ord_name)
-    return li_name, ord_name
+        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        li_name, ord_name = f"li_bkt_{tag}", f"ord_bkt_{tag}"
+        # The warehouse directory outlives the per-process metastore: a
+        # fresh session doesn't know the table, but its location from a
+        # previous run still exists and saveAsTable refuses the name.
+        # Drop both the catalog entry and any orphaned location.
+        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+        for name in (li_name, ord_name):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+        li = table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount", "l_quantity"
+        )
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority", "o_orderdate"
+        )
+        (
+            li.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(N_BUCKETS, "l_orderkey")
+            .sortBy("l_orderkey")
+            .saveAsTable(li_name)
+        )
+        (
+            orders.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(N_BUCKETS, "o_orderkey")
+            .sortBy("o_orderkey")
+            .saveAsTable(ord_name)
+        )
+        return li_name, ord_name
+
+    return session_memo(spark, "storage.bucketed_tables", sf_dir, build)
 
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,17 +128,15 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     directories."""
     import tempfile
 
-    key = ("part_events", spark.sparkContext.applicationId, sf_dir)
-    path = _LAYOUT_CACHE.get(key)
-    if path is not None:
+    def build() -> str:
+        path = tempfile.mkdtemp(prefix="events_by_date_")
+        ev = table(spark, sf_dir, "events").withColumn(
+            "event_date", F.to_date("ts")
+        )
+        ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
         return path
-    path = tempfile.mkdtemp(prefix="events_by_date_")
-    ev = table(spark, sf_dir, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    ev.write.mode("overwrite").partitionBy("event_date").parquet(path)
-    _LAYOUT_CACHE[key] = path
-    return path
+
+    return session_memo(spark, "storage.partitioned_events", sf_dir, build)
 
 
 def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

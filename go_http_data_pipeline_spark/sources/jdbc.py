@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..memo import session_memo
+
 
 def jdbc_options(
     host: str,
@@ -79,7 +81,6 @@ def append_table(df: DataFrame, **kwargs) -> None:
 # --- live JDBC demo against embedded Derby ------------------------------
 
 _DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-_DERBY_CACHE: dict = {}
 
 
 def _derby_customer_url(spark: SparkSession, sf_dir: str) -> str:
@@ -87,23 +88,21 @@ def _derby_customer_url(spark: SparkSession, sf_dir: str) -> str:
     (session, sf_dir); returns its JDBC url. Embedded Derby is the
     in-JVM stand-in for the reference's MySQL — same Spark JDBC
     relation code drives either."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    url = _DERBY_CACHE.get(key)
-    if url is not None:
+    def build() -> str:
+        import tempfile
+        import os
+
+        from ..catalog import table
+
+        db = os.path.join(tempfile.mkdtemp(prefix="derby_"), "fixturedb")
+        url = f"jdbc:derby:{db};create=true"
+        sample = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_name", "c_nationkey", "c_acctbal"
+        )
+        sample.write.jdbc(url, "customer", mode="overwrite", properties=_DERBY_PROPS)
         return url
-    import tempfile
-    import os
 
-    from ..catalog import table
-
-    db = os.path.join(tempfile.mkdtemp(prefix="derby_"), "fixturedb")
-    url = f"jdbc:derby:{db};create=true"
-    sample = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal"
-    )
-    sample.write.jdbc(url, "customer", mode="overwrite", properties=_DERBY_PROPS)
-    _DERBY_CACHE[key] = url
-    return url
+    return session_memo(spark, "jdbc.derby_customer", sf_dir, build)
 
 
 from pyspark.sql import functions as F  # noqa: E402

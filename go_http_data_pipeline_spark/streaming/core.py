@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..determinism import dsum, dsum_sql
+from ..memo import session_memo
 from ..registry import query
 
 EVENTS_DDL = (
@@ -45,7 +46,6 @@ EVENTS_DDL = (
 )
 
 _STAGED: dict[str, str] = {}
-_TS_IS_NANOS: dict = {}
 
 
 def _as_stream_dir(parquet_file: str) -> str:
@@ -72,14 +72,15 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/events.parquet"
-    cache_key = (spark.sparkContext.applicationId, path)
-    ts_is_nanos = _TS_IS_NANOS.get(cache_key)
-    if ts_is_nanos is None:
-        # One batch-read schema probe per (session, file): queries
-        # that open several sources over the same fixture (e.g. the
-        # redelivery-dedup self-union) must not re-run it.
-        ts_is_nanos = dict(spark.read.parquet(path).dtypes)["ts"] == "bigint"
-        _TS_IS_NANOS[cache_key] = ts_is_nanos
+    # One batch-read schema probe per (session, fixture): queries
+    # that open several sources over the same fixture (e.g. the
+    # redelivery-dedup self-union) must not re-run it.
+    ts_is_nanos = session_memo(
+        spark,
+        "streaming.events_ts_is_nanos",
+        sf_dir,
+        lambda: dict(spark.read.parquet(path).dtypes)["ts"] == "bigint",
+    )
     raw = spark.readStream.schema(EVENTS_DDL).parquet(_as_stream_dir(path))
     # Watermarks require tz-typed TIMESTAMP (NTZ rejected), so the
     # stream keeps instants; with session tz pinned UTC above, event-

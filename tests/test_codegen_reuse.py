@@ -5,12 +5,13 @@ must share one cache entry (no ``…ForCodegenStageN`` suffix in the
 class name) — without that, these queries recompiled 2-12 classes on
 every warm run even with the larger cache.
 
-A query's first run in a session builds its memos, planned against a
-persisted but not yet materialized relation; its second run plans
-against the materialized one, whose real size can flip a broadcast
-join's build side (``simhash_neardup_pairs`` and ``ivf_ann_top1``
-compile 2 classes then, once). The pin is the steady state after
-that: the third run compiles nothing."""
+A query's first run builds its session memos, and ``session_memo``
+materializes each persisted one before the query plans over it, so
+the second run compiles nothing. A memo left lazy would plan the
+first run against a persisted but not yet materialized relation;
+its real size can flip a broadcast join's build side on the second
+run (``simhash_neardup_pairs`` and ``ivf_ann_top1`` then compile 2
+classes once)."""
 
 from __future__ import annotations
 
@@ -39,8 +40,7 @@ def test_session_sizes_codegen_cache_and_drops_stage_ids(spark):
 @pytest.mark.parametrize("name", QUERIES)
 def test_warm_run_compiles_nothing(spark, sf_dir, name):
     fn = e.queries()[name]
-    fn(spark, sf_dir).collect()  # builds the query's memos
-    first = fn(spark, sf_dir).collect()
+    first = fn(spark, sf_dir).collect()  # builds the query's memos
     before = codegen_compiles(spark)
     warm = fn(spark, sf_dir).collect()
     after = codegen_compiles(spark)

@@ -281,18 +281,14 @@ def test_wide_probe_reads_only_the_codes_bytes(spark, sf_dir, tmp_path):
     # embeddings scan it executes carries the pushed vec_id bound —
     # at scale the raw floats are read once per query batch, never
     # per probe, and never for the corpus.
+    from go_http_data_pipeline_spark import memo
     from go_http_data_pipeline_spark.llm import pq as pqmod
 
     # Drop (and unpersist) the session memos first: CacheManager
     # substitutes any matching subtree with the persisted relation, so
     # a fresh derivation would otherwise read the cache, not the file.
     # Later callers simply rebuild the memo on demand.
-    app = spark.sparkContext.applicationId
-    for cache in (pqmod._QLUT_CACHE, pqmod._ADC_INPUTS_CACHE):
-        val = cache.pop((app, sf_dir), None)
-        if val is not None:
-            for df in val if isinstance(val, tuple) else (val,):
-                df.unpersist()
+    memo.clear()
     lut, _cn2, q_norms = pqmod._build_adc_inputs(spark, sf_dir)
     for fresh in (lut, q_norms):
         assert fresh.collect()  # execute so scan metrics exist

@@ -13,12 +13,14 @@ pass generates, which ``session.CODEGEN_CACHE_ENTRIES`` must exceed (a
 class compiled under both the driver's and the tasks' class loader
 takes two entries and counts twice).
 
-The first run of a query builds its memos against a persisted but not
-yet materialized relation; the second plans against the materialized
-one, whose real size can flip a broadcast join's build side, so it may
-compile a few classes once (``second``). The third run is the steady
-state (``warm``). Prints one JSON line; exit 1 if any warm run compiles
-or any query errors.
+The first run of a query builds its session memos, which
+``memo.session_memo`` materializes before the query plans over them,
+so the second run (``second``) should compile nothing. The third run
+(``warm``) is the steady state. A query whose second run compiles
+plans differently once something it reads is materialized or cached
+(a broadcast join's build side flips on the relation's real size).
+Prints one JSON line; exit 1 if any warm run compiles or any query
+errors.
 
 A warm run compiles when its generated code differs from the previous
 run's. Spark names some variables from JVM-global counters

@@ -1,17 +1,19 @@
 """Per-query profiler for the optimization rounds.
 
-For each headline query (or an explicit list): builds the shared
-caches first (like bench.py), then times every repeat separately
-(so build-vs-probe cost inside a single query is visible), captures
+For each headline query (or an explicit list): times every repeat
+separately (so build-vs-probe cost inside a single query is visible;
+the session memos a query builds land in its first repeat), captures
 ``explain("formatted")`` to ``plans/<tag>/<query>_<suffix>.txt``, and
 prints a per-repeat table with each repeat's generated-class compiles
 and compile ms (``plans.inspect.codegen_compiles``; a warm repeat
-should compile nothing). The timed action matches bench.py
-(``df.count()``) so numbers are comparable with BENCH_LOCAL.jsonl.
+should compile nothing). The JSON line adds ``memo.stats``: each
+session memo's build seconds and rows. The timed action matches
+bench.py (``df.count()``) so numbers are comparable with
+BENCH_LOCAL.jsonl.
 
 Usage:
     python tools/profile_bench.py [--plans-dir plans/r15 --suffix before]
-                                  [--repeats 3] [--no-cache-phase]
+                                  [--repeats 3]
                                   [query ...]
 """
 
@@ -34,11 +36,11 @@ def main() -> int:
     ap.add_argument("--plans-dir", default="")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--no-cache-phase", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from go_http_data_pipeline_spark import memo
     from go_http_data_pipeline_spark.plans.inspect import codegen_compiles
     from go_http_data_pipeline_spark.session import get_spark
 
@@ -59,28 +61,6 @@ def main() -> int:
 
     sf_dir = args.sf_dir
     qs["q1_pricing_summary"](spark, sf_dir).count()  # warm JVM
-
-    cache_build = 0.0
-    if not args.no_cache_phase:
-        from go_http_data_pipeline_spark.llm.dedup import (
-            component_labels_cached,
-            lsh_bands_cached,
-            shingles_cached,
-        )
-
-        t0 = time.perf_counter()
-        shingles_cached(spark, sf_dir).count()
-        t1 = time.perf_counter()
-        lsh_bands_cached(spark, sf_dir).count()
-        t2 = time.perf_counter()
-        component_labels_cached(spark, sf_dir).count()
-        t3 = time.perf_counter()
-        cache_build = t3 - t0
-        print(
-            f"# cache: shingles={t1 - t0:.3f}s bands={t2 - t1:.3f}s"
-            f" components={t3 - t2:.3f}s total={cache_build:.3f}s",
-            file=sys.stderr,
-        )
 
     jvm_gc = spark._jvm.java.lang.System.gc
     out: dict[str, dict] = {}
@@ -125,7 +105,7 @@ def main() -> int:
     total = sum(v["min"] for v in out.values())
     print(json.dumps({
         "total_min_sum": round(total, 3),
-        "cache_build": round(cache_build, 3),
+        "memos": memo.stats(spark),
         "queries": {k: v["min"] for k, v in out.items()},
         "compiles": {k: v["compiles"] for k, v in out.items()},
         "compile_ms": {k: v["compile_ms"] for k, v in out.items()},
