@@ -30,6 +30,30 @@ once, for queries whose plan changes after their first run has
 materialized a memo. The cache is JVM-wide and sized when the first
 class compiles, so both are fixed here, not options.
 
+Worker interpreter. Spark starts a fresh Python process for every
+streaming query that reads a Python data source (the source's runner),
+besides its worker daemon and the data-source planner runners. It puts
+``$SPARK_HOME/python/lib/pyspark.zip`` and the py4j source zip first
+on each one's ``PYTHONPATH``, and zipimport never caches bytecode, so
+every such process compiles pyspark from source: importing the
+streaming-source runner module took 0.81-0.97 s, and a
+``foreach_batch_merge`` call with no new data took 1.40-1.66 s on 4
+cores. On a local master a new session therefore sets
+``sc.pythonExec`` to ``worker_python.sh``, which drops the two zips
+from ``PYTHONPATH`` and execs the interpreter pyspark would have
+picked (``$PYSPARK_PYTHON``, else ``python3``), so workers import its
+installed, compiled pyspark and py4j (the runner module in
+0.18-0.26 s). A conf cannot do this:
+``spark.executorEnv.PYTHONPATH`` only appends after the zips. The
+empty call fell to 0.44-0.65 s, and the median perfbench
+``ingest_merge`` live call from 2.63 to 1.33 s. UDFs, pandas
+functions and data sources copy ``sc.pythonExec`` when they are
+wrapped, so it is set before ``get_spark`` returns. The launcher is
+installed only if it runs and imports the driver's pyspark and py4j
+versions, matching ``spark.version``; otherwise Spark's default
+stands. That check starts before the JVM and is reaped after it, so
+session start does not get longer.
+
 Locally we run ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
 process may run on) — the same declarative plans move to a cluster
 unchanged.
@@ -38,10 +62,50 @@ unchanged.
 from __future__ import annotations
 
 import os
+import subprocess
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 CODEGEN_CACHE_ENTRIES = 4096
+WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_python.sh")
+_WORKER_CHECK = "import pyspark, py4j; print(pyspark.__version__, py4j.__version__)"
+
+
+def start_worker_check(launcher: str = WORKER_PYTHON) -> subprocess.Popen | None:
+    """Start ``launcher`` importing pyspark and py4j; None if it cannot
+    be executed at all."""
+    try:
+        return subprocess.Popen(
+            [launcher, "-c", _WORKER_CHECK],
+            stdin=subprocess.DEVNULL,
+            stdout=subprocess.PIPE,
+            stderr=subprocess.DEVNULL,
+            text=True,
+        )
+    except OSError:
+        return None
+
+
+def worker_check_passed(check: subprocess.Popen | None, spark_version: str) -> bool:
+    """Reap ``check``: True when it printed the driver's pyspark and
+    py4j versions and pyspark's version is ``spark_version``."""
+    if check is None:
+        return False
+    import py4j
+    import pyspark
+
+    try:
+        out, _ = check.communicate(timeout=60)
+    except subprocess.TimeoutExpired:
+        check.kill()
+        check.communicate()
+        return False
+    return (
+        check.returncode == 0
+        and out.split() == [pyspark.__version__, py4j.__version__]
+        and pyspark.__version__ == spark_version
+    )
 
 
 def get_spark(
@@ -70,4 +134,13 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    new_local = SparkContext._active_spark_context is None and master.startswith("local")
+    check = start_worker_check() if new_local else None
+    try:
+        spark = builder.getOrCreate()
+    except BaseException:
+        worker_check_passed(check, "")
+        raise
+    if worker_check_passed(check, spark.version):
+        spark.sparkContext.pythonExec = WORKER_PYTHON
+    return spark

@@ -150,6 +150,17 @@ def foreach_batch_merge(
     there leaves the merged copy intact in the staging dir. A table
     format (Delta/Iceberg MERGE INTO) is the truly-atomic production
     drop-in.
+
+    What one call costs: it starts a streaming query from the
+    checkpoint, and for a Python source (``httpjson``) Spark starts
+    one fresh source-runner Python process for that query. Such a
+    source does not support ``availableNow``, so the query falls back
+    to a single batch (the WARN in every call's log says so): a call
+    merges what the source offered when it started and stops. On 4
+    cores a call with no new data took 1.40-1.66 s while the runner
+    compiled pyspark from Spark's zip, and 0.44-0.65 s with the
+    compiled pyspark ``session.get_spark`` arranges; the median
+    perfbench ``ingest_merge`` live call fell from 2.63 to 1.33 s.
     """
     import os
     import shutil
