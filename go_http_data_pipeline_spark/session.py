@@ -139,7 +139,9 @@ def get_spark(
     try:
         spark = builder.getOrCreate()
     except BaseException:
-        worker_check_passed(check, "")
+        if check is not None:
+            check.kill()
+            check.wait()
         raise
     if worker_check_passed(check, spark.version):
         spark.sparkContext.pythonExec = WORKER_PYTHON

@@ -428,18 +428,17 @@ def _http_range(url: str, lo: int, hi: int | None, timeout_s: float):
         raise
 
 
-def _http_range_with_total(url: str, lo: int, hi: int, timeout_s: float):
-    """Range GET of ``[lo, hi)`` returning ``(data, total_length)``.
+def _http_range_with_total(url: str, lo: int, timeout_s: float):
+    """Open-ended Range GET returning ``(data, total_length)``.
     ``total_length`` comes from the Content-Range header — present on
     both 206 (``bytes lo-hi/total``) and 416 (``bytes */total``)
-    responses — or is the body's length on a Range-ignoring 200, whose
-    ``data`` is then the whole rest of the log from ``lo``; None when
+    responses — or Content-Length on a Range-ignoring 200; None when
     the server reports neither. The total is what lets the stream
     reader DETECT a truncated/rotated log instead of stalling."""
     import urllib.error
     import urllib.request
 
-    req = urllib.request.Request(url, headers={"Range": f"bytes={lo}-{hi - 1}"})
+    req = urllib.request.Request(url, headers={"Range": f"bytes={lo}-"})
 
     def _total(headers) -> int | None:
         cr = headers.get("Content-Range", "")
@@ -458,30 +457,18 @@ def _http_range_with_total(url: str, lo: int, hi: int, timeout_s: float):
         raise
 
 
-# latestOffset() reads the log's tail backwards in chunks of this size
-# to find its last newline.
-_TAIL_CHUNK = 64 * 1024
-
-
 class _UrlStreamReader(DataSourceStreamReader):
     """Polling stream reader over an append-only JSONL log served at
     a URL — the streaming twin of ``_UrlBatchReader`` and the
     network-transport twin of ``_SpoolStreamReader``.
 
     Offset = ``{"bytes": n}``: the byte position of a LINE BOUNDARY
-    in the log. ``latestOffset()`` advances to the log's last newline,
+    in the log. ``latestOffset()`` fetches only the delta
+    (``Range: bytes=known-``) and advances to the last newline seen,
     so a partial trailing line (an in-flight append) is never split
-    across batches. It does not download the delta: a one-byte probe
-    at the known position gives the log's length (Content-Range), and
-    the tail is then read backwards in ``_TAIL_CHUNK`` pieces until a
-    newline turns up — one chunk unless the last line is longer. A
-    new reader knows only byte 0 until a restart's first
-    ``partitions()`` call resyncs it, so its first poll over a
-    multi-MB log still fetches ~64 KiB, not the log.
-
-    ``partitions(start, end)`` describes the exact committed byte
-    range and ``read()`` re-fetches it with the same Range request,
-    so ANY committed range replays byte-identically
+    across batches; ``partitions(start, end)`` describes the exact
+    committed byte range and ``read()`` re-fetches it with the same
+    Range request, so ANY committed range replays byte-identically
     after a crash — the engine's checkpointed offsets plus this
     deterministic re-read give at-least-once, which the idempotent
     downstream merge upgrades to effectively-once (same contract the
@@ -503,8 +490,8 @@ class _UrlStreamReader(DataSourceStreamReader):
         return {"bytes": 0}
 
     def latestOffset(self) -> dict:
-        head, total = _http_range_with_total(
-            self._url, self._known, self._known + 1, self._timeout
+        tail, total = _http_range_with_total(
+            self._url, self._known, self._timeout
         )
         if total is not None and total < self._known:
             # The log SHRANK: it was truncated or rotated, violating
@@ -518,27 +505,10 @@ class _UrlStreamReader(DataSourceStreamReader):
                 f"offset {self._known} — the endpoint must be append-only "
                 "(rotate to a NEW url instead)"
             )
-        self._known = self._last_line_end(head, total)
+        cut = tail.rfind(b"\n")
+        if cut != -1:
+            self._known += cut + 1
         return {"bytes": self._known}
-
-    def _last_line_end(self, head: bytes, total: int | None) -> int:
-        """Position just past the log's last newline after the known
-        position (``head`` is the probe's answer from there), or the
-        known position when there is none yet."""
-        lo = self._known
-        if total is None:  # no length reported: fetch the whole delta
-            head = _http_range(self._url, lo, None, self._timeout)
-            total = lo + len(head)
-        if lo + len(head) >= total:  # the probe already holds the delta
-            return lo + head.rfind(b"\n") + 1
-        hi = total
-        while hi > lo:
-            start = max(lo, hi - _TAIL_CHUNK)
-            cut = _http_range(self._url, start, hi, self._timeout).rfind(b"\n")
-            if cut != -1:
-                return start + cut + 1
-            hi = start
-        return lo
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         lo, hi = int(start["bytes"]), int(end["bytes"])
