@@ -46,7 +46,7 @@ installed, compiled pyspark and py4j (the runner module in
 0.18-0.26 s). A conf cannot do this:
 ``spark.executorEnv.PYTHONPATH`` only appends after the zips. The
 empty call fell to 0.44-0.65 s, and the median perfbench
-``ingest_merge`` live call from 2.63 to 1.33 s. UDFs, pandas
+``ingest_merge`` live call from 2.63 to 1.28 s. UDFs, pandas
 functions and data sources copy ``sc.pythonExec`` when they are
 wrapped, so it is set before ``get_spark`` returns. The launcher is
 installed only if it runs and imports the driver's pyspark and py4j

@@ -160,7 +160,7 @@ def foreach_batch_merge(
     cores a call with no new data took 1.40-1.66 s while the runner
     compiled pyspark from Spark's zip, and 0.44-0.65 s with the
     compiled pyspark ``session.get_spark`` arranges; the median
-    perfbench ``ingest_merge`` live call fell from 2.63 to 1.33 s.
+    perfbench ``ingest_merge`` live call fell from 2.63 to 1.28 s.
     """
     import os
     import shutil
