@@ -48,11 +48,33 @@ installed, compiled pyspark and py4j (the runner module in
 empty call fell to 0.44-0.65 s, and the median perfbench
 ``ingest_merge`` live call from 2.63 to 1.28 s. UDFs, pandas
 functions and data sources copy ``sc.pythonExec`` when they are
-wrapped, so it is set before ``get_spark`` returns. The launcher is
-installed only if it runs and imports the driver's pyspark and py4j
-versions, matching ``spark.version``; otherwise Spark's default
-stands. That check starts before the JVM and is reaped after it, so
-session start does not get longer.
+wrapped, so it is set before ``get_spark`` returns.
+
+Fork server. Even compiled, each fresh runner imported pyspark,
+pandas and pyarrow before it could build its reader, and a live
+call's query start and stop (``core.start_stop_s``) still took
+0.43-0.49 s. So the first local session of a driver process starts
+``forkserver.py`` through the launcher. It imports what those
+processes import, freezes that heap for the garbage collector and
+serves on a Unix socket in a private (0700) temporary directory,
+whose path reaches the launcher through the environment the JVM
+inherits (internal, not an option). The launcher sends each
+``-m MODULE`` launch (the source runner, the worker daemon, the
+data-source planner daemons) to a small client that passes the
+process's stdio, argv, environment and working directory to the
+server, which forks a child to run the module; the client relays
+signals and the child's exit status. The same query start and stop
+fell to 0.14-0.17 s. The server starts with the hash seed and OpenMP
+thread count Spark gives its workers (unless the driver's environment
+sets them), since a forked child keeps both; a launch whose
+environment asks for other interpreter settings is exec'd. So is
+every launch while the socket is absent (no server yet, or gone).
+The server is also the launcher check: its first line must name the
+driver's pyspark and py4j versions, matching ``spark.version``, or
+the server is stopped and Spark's default interpreter stands. It
+starts before the JVM and imports while the JVM starts; it exits,
+removing its directory, when the driver process exits (EOF on its
+stdin).
 
 Locally we run ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
 process may run on) — the same declarative plans move to a cluster
@@ -62,23 +84,37 @@ unchanged.
 from __future__ import annotations
 
 import os
+import select
 import subprocess
+import tempfile
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from .forkserver import SOCKET_DIR_ENV
+
 CODEGEN_CACHE_ENTRIES = 4096
-WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_python.sh")
-_WORKER_CHECK = "import pyspark, py4j; print(pyspark.__version__, py4j.__version__)"
+_HERE = os.path.dirname(os.path.abspath(__file__))
+WORKER_PYTHON = os.path.join(_HERE, "worker_python.sh")
+FORK_SERVER = os.path.join(_HERE, "forkserver.py")
+_fork_server: subprocess.Popen | None = None  # this process's, from its first local session
 
 
-def start_worker_check(launcher: str = WORKER_PYTHON) -> subprocess.Popen | None:
-    """Start ``launcher`` importing pyspark and py4j; None if it cannot
-    be executed at all."""
+def start_fork_server(socket_dir: str, launcher: str = WORKER_PYTHON) -> subprocess.Popen | None:
+    """Start the fork server through ``launcher``, serving in
+    ``socket_dir``; None if ``launcher`` cannot be executed at all."""
+    # The hash seed and OpenMP thread count Spark starts its workers
+    # with, unless the driver's environment sets them.
+    env = dict(
+        os.environ,
+        PYTHONHASHSEED=os.environ.get("PYTHONHASHSEED", "0"),
+        OMP_NUM_THREADS=os.environ.get("OMP_NUM_THREADS", "1"),
+    )
     try:
         return subprocess.Popen(
-            [launcher, "-c", _WORKER_CHECK],
-            stdin=subprocess.DEVNULL,
+            [launcher, "-u", FORK_SERVER, "--serve", socket_dir],
+            env=env,
+            stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
             stderr=subprocess.DEVNULL,
             text=True,
@@ -87,25 +123,37 @@ def start_worker_check(launcher: str = WORKER_PYTHON) -> subprocess.Popen | None
         return None
 
 
-def worker_check_passed(check: subprocess.Popen | None, spark_version: str) -> bool:
-    """Reap ``check``: True when it printed the driver's pyspark and
-    py4j versions and pyspark's version is ``spark_version``."""
-    if check is None:
+def stop_fork_server(server: subprocess.Popen) -> None:
+    """Close the server's stdin, on which it removes its socket
+    directory and exits."""
+    server.stdin.close()
+    try:
+        server.wait(timeout=10)
+    except subprocess.TimeoutExpired:
+        server.kill()
+        server.wait()
+
+
+def fork_server_passed(server: subprocess.Popen | None, spark_version: str) -> bool:
+    """True when ``server`` printed the driver's pyspark and py4j
+    versions and pyspark's version is ``spark_version``. The version
+    line is read once (waiting up to 60 s); a server that fails the
+    check is stopped."""
+    if server is None:
         return False
     import py4j
     import pyspark
 
-    try:
-        out, _ = check.communicate(timeout=60)
-    except subprocess.TimeoutExpired:
-        check.kill()
-        check.communicate()
-        return False
-    return (
-        check.returncode == 0
-        and out.split() == [pyspark.__version__, py4j.__version__]
+    if not hasattr(server, "versions"):
+        ready, _, _ = select.select([server.stdout], [], [], 60)
+        server.versions = server.stdout.readline().split() if ready else []
+    passed = (
+        server.versions == [pyspark.__version__, py4j.__version__]
         and pyspark.__version__ == spark_version
     )
+    if not passed:
+        stop_fork_server(server)
+    return passed
 
 
 def get_spark(
@@ -134,15 +182,16 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    global _fork_server
     new_local = SparkContext._active_spark_context is None and master.startswith("local")
-    check = start_worker_check() if new_local else None
-    try:
-        spark = builder.getOrCreate()
-    except BaseException:
-        if check is not None:
-            check.kill()
-            check.wait()
-        raise
-    if worker_check_passed(check, spark.version):
+    if new_local and _fork_server is None:
+        socket_dir = tempfile.mkdtemp(prefix="spark-graft-fork-")
+        _fork_server = start_fork_server(socket_dir)
+        if _fork_server is None:
+            os.rmdir(socket_dir)
+        else:
+            os.environ[SOCKET_DIR_ENV] = socket_dir
+    spark = builder.getOrCreate()
+    if new_local and fork_server_passed(_fork_server, spark.version):
         spark.sparkContext.pythonExec = WORKER_PYTHON
     return spark

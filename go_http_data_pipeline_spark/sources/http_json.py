@@ -51,6 +51,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import urllib.error
+import urllib.request
 from collections.abc import Sequence
 
 from pyspark.sql.datasource import (
@@ -215,9 +217,6 @@ class _UrlBatchReader(DataSourceReader):
     def _probe(self) -> int | None:
         """HEAD the endpoint; returns Content-Length if byte ranges
         are usable, else None (no data fetched either way)."""
-        import urllib.error
-        import urllib.request
-
         req = urllib.request.Request(self._url, method="HEAD")
         try:
             with urllib.request.urlopen(req, timeout=self._timeout) as resp:
@@ -253,8 +252,6 @@ class _UrlBatchReader(DataSourceReader):
         lo, hi, total = partition.value
         if hi is None:
             # Whole body: may be a JSON array or JSONL.
-            import urllib.request
-
             with urllib.request.urlopen(
                 self._url, timeout=self._timeout
             ) as resp:
@@ -410,9 +407,6 @@ def _http_range(url: str, lo: int, hi: int | None, timeout_s: float):
     body: slice locally) or reports nothing-new (416). Delta reads are
     the point: an append-only ingest log re-polled every trigger must
     not be re-downloaded from byte 0 each time."""
-    import urllib.error
-    import urllib.request
-
     rng = f"bytes={lo}-" if hi is None else f"bytes={lo}-{hi - 1}"
     req = urllib.request.Request(url, headers={"Range": rng})
     try:
@@ -435,9 +429,6 @@ def _http_range_with_total(url: str, lo: int, timeout_s: float):
     responses — or Content-Length on a Range-ignoring 200; None when
     the server reports neither. The total is what lets the stream
     reader DETECT a truncated/rotated log instead of stalling."""
-    import urllib.error
-    import urllib.request
-
     req = urllib.request.Request(url, headers={"Range": f"bytes={lo}-"})
 
     def _total(headers) -> int | None:

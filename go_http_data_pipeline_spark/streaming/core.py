@@ -158,9 +158,12 @@ def foreach_batch_merge(
     to a single batch (the WARN in every call's log says so): a call
     merges what the source offered when it started and stops. On 4
     cores a call with no new data took 1.40-1.66 s while the runner
-    compiled pyspark from Spark's zip, and 0.44-0.65 s with the
-    compiled pyspark ``session.get_spark`` arranges; the median
-    perfbench ``ingest_merge`` live call fell from 2.63 to 1.28 s.
+    compiled pyspark from Spark's zip, 0.44-0.65 s with the compiled
+    pyspark ``session.get_spark`` arranges, and 0.15-0.19 s with the
+    runner forked from the session's fork server (0.44-0.59 s without
+    it, same probe). The median perfbench ``ingest_merge`` live call
+    fell from 2.63 to 1.28 s, then from 1.09 to 0.66 s; about two
+    thirds of it is now the merge (``addBatch``).
     """
     import os
     import shutil
