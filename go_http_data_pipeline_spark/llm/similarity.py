@@ -269,7 +269,8 @@ def cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registry note (round 10): this twin shared ``cosine_topk``'s
     oracle verbatim, so its registry row certified nothing the
     baseline's didn't — it retired with the VERDICT r9 item-3 fold.
-    The implementation race stays: bench.py times it every run and
+    The implementation race stays: perfbench's ``batch_queries``
+    workload times it beside ``cosine_topk``, and
     ``tests/test_llm_ops.py`` pins row-for-row equality with
     ``cosine_topk``.
 
@@ -350,12 +351,6 @@ def _bucket_col() -> F.Column:
     for b in bits[1:]:
         bucket = bucket + b
     return bucket.cast("long")
-
-
-def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, bucket): 8-bit hyperplane-sign bucket per vector."""
-    emb = _spread(spark, table(spark, sf_dir, "embeddings"))
-    return emb.select("vec_id", _bucket_col().alias("bucket"))
 
 
 def _ann_features(spark: SparkSession, sf_dir: str) -> DataFrame:

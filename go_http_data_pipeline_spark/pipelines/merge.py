@@ -9,11 +9,14 @@ update, so MERGE is expressed relationally:
 
 which Catalyst executes as one anti-join pass. It is not shuffle-free:
 the base parquet table is not bucketed by key, so the anti-join
-shuffles it (see :func:`merge_into`). At 100 TB this runs inside
-``foreachBatch`` against a partitioned table, rewriting only the
-partitions that contain matched keys (partition pruning on the
-anti-join side); with a table format that supports MERGE INTO the
-same plan maps 1:1 onto it.
+shuffles it (see :func:`merge_into`). The result is the whole merged
+table, and ``streaming.core.foreach_batch_merge`` writes all of it to
+a staging directory on every micro-batch before swapping it in: each
+call rewrites every row of the base, however few keys the batch
+touches (perfbench's traced ``merge.rows_rewritten_per_record`` is
+17-20 for ~300-record batches into a 20-35k-row table). Rewriting
+only the files that hold matched keys is not built; with a table
+format that supports MERGE INTO the same plan maps 1:1 onto it.
 """
 
 from __future__ import annotations
@@ -54,10 +57,9 @@ def apply_cdc(
     The relational form is the same single pass as :func:`merge_into`
     (left-anti on touched keys, then union), so it inherits the same
     scale shape: the anti-join shuffles ``base`` unless the feed is
-    known to be small enough to broadcast, and under ``foreachBatch``
-    against a partitioned table only the partitions holding touched
-    keys rewrite. Delete-by-anti-join means a delete costs the same as
-    an update — no tombstone scan.
+    known to be small enough to broadcast, and the output is the whole
+    table, so writing it back rewrites every row. Delete-by-anti-join
+    means a delete costs the same as an update — no tombstone scan.
 
     The CDC feed must hold at most one row per key (standard MERGE
     precondition; a multi-row feed is compacted upstream to its latest

@@ -107,11 +107,9 @@ def executed_file_scans(df: DataFrame) -> list[dict]:
 def scan_audit(df: DataFrame, corpus_path: str) -> dict:
     """Partition an EXECUTED ``df``'s file scans into the corpus-side
     scan(s) rooted at ``corpus_path`` and everything else, plus the
-    corpus table's parquet bytes on disk — the shared recipe behind
-    the wide-ADC-probe bytes pin (tests/test_pq.py) and the §M
-    measurement (tools/scaling_study.py), extracted so the test and
-    the published number can't drift. Callers assert; this only
-    gathers."""
+    corpus table's parquet bytes on disk — the recipe behind the
+    wide-ADC-probe bytes pin (tests/test_pq.py). Callers assert; this
+    only gathers."""
     import glob
     import os
 

@@ -71,13 +71,6 @@ def read_table(spark: SparkSession, **kwargs) -> DataFrame:
     return spark.read.format("jdbc").options(**jdbc_options(**kwargs)).load()
 
 
-def append_table(df: DataFrame, **kwargs) -> None:
-    """Keyed insert path (S4): append rows into a JDBC table."""
-    df.write.format("jdbc").options(**jdbc_options(**kwargs)).mode(
-        "append"
-    ).save()
-
-
 # --- live JDBC demo against embedded Derby ------------------------------
 
 _DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}

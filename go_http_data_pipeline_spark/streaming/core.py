@@ -669,11 +669,6 @@ def _lsh_index(index_dir: str) -> "GenIndex":
     )
 
 
-def _lsh_gen_table(index_dir: str, batch_id: int) -> str:
-    """Catalog name for a compacted generation (see GenIndex.gen_table)."""
-    return _lsh_index(index_dir).gen_table(batch_id)
-
-
 def lsh_drop_generations(spark: SparkSession, index_dir: str) -> None:
     """Drop every catalog entry this index registered (cleanup when
     the index itself is discarded; the data dirs are the caller's)."""

@@ -68,15 +68,6 @@ def _gen_number(path: str) -> int | None:
     return int(m.group(1)) if m else None
 
 
-def _data_files(path: str) -> bool:
-    """Whether a generation dir holds any data files (underscore- and
-    dot-prefixed entries are Spark metadata, not data). Kept as a
-    module function for callers outside an index; GenIndex itself
-    asks its STORE (``self.store.dir_has_data`` — same body on the
-    default Posix store)."""
-    return PosixIndexStore().dir_has_data(path)
-
-
 class GenIndex:
     """One generational bucketed index rooted at ``index_dir``.
 

@@ -1,19 +1,10 @@
 """Round-9 additions: CDC MERGE with schema evolution
 (``pipelines/merge.apply_cdc`` + ``cdc_merge_schema_evolution``), the
-streaming decontamination gate (``streaming_contamination_gate``), and
-the bench digest's environmental-run guard (VERDICT r8 item 4: two
-globally-slow runs "confirmed" a regression on a query whose code
-hadn't changed — the digest confused weather with climate).
+streaming decontamination gate (``streaming_contamination_gate``) and
+SCD2 temporal-enrich boundaries.
 """
 
 from __future__ import annotations
-
-import sys
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-import bench  # noqa: E402
 
 
 # ------------------------------------------------------------ apply_cdc
@@ -122,70 +113,6 @@ def test_streaming_gate_matches_batch_audit(spark, sf_dir):
     for doc_id, (n_hits, keep) in gate.items():
         assert n_hits == audit.get(doc_id, 0)
         assert keep == (doc_id not in audit)
-
-
-# --------------------------------------------------- bench digest env guard
-
-
-def test_run_median_delta():
-    times = {"a": 1.1, "b": 2.2, "c": 3.0}
-    baseline = {"a": 1.0, "b": 2.0, "c": 3.0}
-    assert bench._run_median_delta(times, baseline) == 1.1
-    assert bench._run_median_delta({}, baseline) is None
-    assert bench._run_median_delta(times, {}) is None
-
-
-def test_globally_slow_run_cannot_confirm():
-    """The r8 failure mode: every query ~1.1x slow (host steal), one
-    crosses 1.25x. The run-level median delta exceeds ENV_SLOW_MEDIAN,
-    so nothing confirms even though the previous record flagged the
-    same query."""
-    baseline = {f"q{i}": 1.0 for i in range(10)}
-    times = {n: 1.1 for n in baseline} | {"q0": 1.4}
-    flagged = {"q0": 1.4}
-    prev = {"queries": baseline, "flagged_vs_median": {"q0": 1.5}}
-    run_med = bench._run_median_delta(times, baseline)
-    assert run_med is not None and run_med > bench.ENV_SLOW_MEDIAN
-    assert bench._confirmed_regressions(flagged, run_med, prev, baseline) == []
-
-
-def test_previous_globally_slow_run_cannot_seed_confirmation():
-    """A normal run must not confirm against flags raised by a
-    globally-slow previous run (the other half of the r8 failure:
-    BOTH flagging runs were slow)."""
-    baseline = {f"q{i}": 1.0 for i in range(10)}
-    # current run: normal except a genuine-looking q0 spike
-    run_med = 1.0
-    flagged = {"q0": 1.3}
-    prev_slow = {
-        "queries": {n: 1.12 for n in baseline},
-        "flagged_vs_median": {"q0": 1.5},
-    }
-    assert (
-        bench._confirmed_regressions(flagged, run_med, prev_slow, baseline)
-        == []
-    )
-    # stored run_median_vs_baseline takes precedence when present
-    prev_tagged = dict(prev_slow, run_median_vs_baseline=1.2)
-    assert (
-        bench._confirmed_regressions(flagged, run_med, prev_tagged, baseline)
-        == []
-    )
-
-
-def test_normal_runs_still_confirm_genuine_regressions():
-    """The guard must not swallow real regressions: two consecutive
-    NORMAL runs (median delta ~1.0) flagging the same query confirm."""
-    baseline = {f"q{i}": 1.0 for i in range(10)}
-    flagged = {"q0": 2.0}
-    prev = {
-        "queries": dict(baseline, q0=2.0),
-        "flagged_vs_median": {"q0": 2.0},
-        "run_median_vs_baseline": 1.0,
-    }
-    assert bench._confirmed_regressions(flagged, 1.0, prev, baseline) == [
-        "q0"
-    ]
 
 
 # ------------------------------------- SCD2 temporal enrich boundaries

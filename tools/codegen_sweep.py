@@ -5,8 +5,9 @@ a query whose classes were evicted from Spark's codegen cache, or
 whose stage code differs from its earlier run only in a class-name
 suffix, pays Janino compile time again on every run.
 
-For every registered query (plus the bench-only vectorized twin):
-build ``fn(spark, sf_dir)`` and ``collect()`` it three times, reading
+For every registered query (plus ``cosine_topk_vectorized``, the
+unregistered twin of ``cosine_topk``): build ``fn(spark, sf_dir)``
+and ``collect()`` it three times, reading
 ``plans.inspect.codegen_compiles`` around each run. The first-run
 compile total of the whole pass is the number of distinct classes the
 pass generates, which ``session.CODEGEN_CACHE_ENTRIES`` must exceed (a

@@ -9,10 +9,10 @@ row count. Round 15's ad-hoc sweep caught exactly that on
 embedding_neardup_pairs after the catalog memo landed; this tool is
 that sweep promoted to a standing gate step (VERDICT r15 item 8).
 
-For every registered query (plus the bench-only vectorized twin):
-run ``fn(spark, sf_dir)`` twice and assert ``df.count() ==
-len(df.collect())``. Prints one JSON line; exit 1 on any mismatch or
-error.
+For every registered query (plus ``cosine_topk_vectorized``, the
+unregistered twin of ``cosine_topk``): run ``fn(spark, sf_dir)``
+twice and assert ``df.count() == len(df.collect())``. Prints one JSON
+line; exit 1 on any mismatch or error.
 
 Usage:
     python tools/count_sweep.py [sf_dir]      # default sf0.001
