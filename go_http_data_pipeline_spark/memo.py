@@ -8,10 +8,16 @@ itself, the fixture directory and the memo's name. A sibling session
 (``newSession``) has its own conf and temp views, so it builds its own
 entry; a restarted context has a new applicationId, so a stopped
 context's entries are never served.
+
+A memo that stages files makes its directory with ``temp_dir``, which
+is removed, with everything in it, when the driver process exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import time
 from typing import Callable, TypeVar
 
@@ -21,6 +27,21 @@ T = TypeVar("T")
 
 # key -> (value, build seconds, rows)
 _ENTRIES: dict = {}
+_TEMP_DIRS: list[str] = []
+
+
+@atexit.register
+def _remove_temp_dirs() -> None:
+    for d in _TEMP_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def temp_dir(prefix: str) -> str:
+    """A new directory under ``$TMPDIR`` for a memo's files, removed
+    when the driver process exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _TEMP_DIRS.append(d)
+    return d
 
 
 def _persisted(value) -> list[DataFrame]:

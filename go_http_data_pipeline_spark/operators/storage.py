@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..determinism import davg, davg_sql, dsum, dsum_sql
-from ..memo import session_memo
+from ..memo import session_memo, temp_dir
 from ..registry import query
 
 N_BUCKETS = 8
@@ -126,10 +126,9 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     returns the path. The ingest-time layout every time-series store
     uses: queries with a date predicate read only matching
     directories."""
-    import tempfile
 
     def build() -> str:
-        path = tempfile.mkdtemp(prefix="events_by_date_")
+        path = temp_dir("events_by_date_")
         ev = table(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         )

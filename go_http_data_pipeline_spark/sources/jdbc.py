@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..memo import session_memo
+from ..memo import session_memo, temp_dir
 
 
 def jdbc_options(
@@ -82,12 +82,11 @@ def _derby_customer_url(spark: SparkSession, sf_dir: str) -> str:
     in-JVM stand-in for the reference's MySQL — same Spark JDBC
     relation code drives either."""
     def build() -> str:
-        import tempfile
         import os
 
         from ..catalog import table
 
-        db = os.path.join(tempfile.mkdtemp(prefix="derby_"), "fixturedb")
+        db = os.path.join(temp_dir("derby_"), "fixturedb")
         url = f"jdbc:derby:{db};create=true"
         sample = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_nationkey", "c_acctbal"

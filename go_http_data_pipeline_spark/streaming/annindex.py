@@ -49,6 +49,7 @@ from ..llm.similarity import (
     _DOT_SQL,
     _NORMS_SQL,
 )
+from ..memo import session_memo, temp_dir
 from ..registry import query
 from .genindex import GenIndex
 
@@ -285,27 +286,24 @@ def ivf_index_step(
         idx.compact(spark, batch_id)
 
 
-# Per-(app, sf_dir) memo of the multi-file staging of embeddings (one
-# fixture file = one micro-batch; incremental indexing needs several).
-_EMB_SHARDS: dict = {}
-
-
 def _emb_sharded_dir(
     spark: SparkSession, sf_dir: str, n: int = _IVF_ARRIVALS
 ) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    d = _EMB_SHARDS.get(key)
-    if d and os.path.isdir(d):
+    """The embeddings fixture staged as ``n`` files, once per session:
+    one fixture file = one micro-batch, and incremental indexing needs
+    several."""
+
+    def build() -> str:
+        d = temp_dir("emb_shards_")
+        (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .repartition(n, "vec_id")
+            .write.mode("overwrite")
+            .parquet(d)
+        )
         return d
-    d = tempfile.mkdtemp(prefix="emb_shards_")
-    (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(n, "vec_id")
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    _EMB_SHARDS[key] = d
-    return d
+
+    return session_memo(spark, f"annindex.emb_shards.{n}", sf_dir, build)
 
 
 def _ivf_stream_oracle(delete_mod: int | None = None) -> str:

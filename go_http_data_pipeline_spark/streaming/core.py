@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..determinism import dsum, dsum_sql
-from ..memo import session_memo
+from ..memo import session_memo, temp_dir
 from ..registry import query
 
 EVENTS_DDL = (
@@ -620,26 +620,22 @@ def _lsh_index_oracle() -> str:
     """
 
 
-# Per-(app, sf_dir) memo of the multi-file staging of documents (the
-# fixture is ONE parquet file = one micro-batch; incremental indexing
-# needs several).
-_DOC_SHARDS: dict = {}
-
-
 def _docs_sharded_dir(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    d = _DOC_SHARDS.get(key)
-    if d and os.path.isdir(d):
+    """The documents fixture staged as ``n`` files, once per session:
+    the fixture is one parquet file = one micro-batch, and incremental
+    indexing needs several."""
+
+    def build() -> str:
+        d = temp_dir("docs_shards_")
+        (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .repartition(n, "doc_id")
+            .write.mode("overwrite")
+            .parquet(d)
+        )
         return d
-    d = tempfile.mkdtemp(prefix="docs_shards_")
-    (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .repartition(n, "doc_id")
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    _DOC_SHARDS[key] = d
-    return d
+
+    return session_memo(spark, f"streaming.docs_shards.{n}", sf_dir, build)
 
 
 # Fold the per-batch band dirs into one compacted generation every
